@@ -26,6 +26,13 @@ Both forms truncate the plan identically; results are byte-identical
 (asserted by ``tests/test_lineage.py`` in a fresh subprocess session
 with a checkpoint dir set).
 
+``cut_observed`` is the one place where a loop's convergence probe
+rides on a cut: it attaches ``DataFrame.observe`` aggregates to the
+frame being cut, so the eager cut job itself returns the round's
+scalars (rows still changing, the deepest path so far) and no second
+``take``/``count`` job runs per round.  This is the pattern of
+``sinks.write_table_observed``, applied to the checkpoint job.
+
 Reference provenance: the reference (BlueForty.py) has no iterative
 operator — it delegates query execution to a warehouse.  This module
 exists for the engine's north-star extensions (graph dedup, PageRank,
@@ -34,9 +41,9 @@ BPE training) where iteration is inherent.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
-__all__ = ["cut_lineage"]
+__all__ = ["cut_lineage", "cut_observed"]
 
 
 def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -53,3 +60,17 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def cut_observed(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """Eagerly cut ``df``'s lineage and return the cut frame together
+    with ``metrics`` (name → aggregate Column) computed over its rows by
+    the same job: ``cut_observed(step, n=F.count(F.lit(1)))`` →
+    ``(cut, {"n": ...})``.  The cut is always eager — an observation
+    on a lazy frame would never fire, and reading it would block.
+    """
+    obs = Observation()
+    cut = cut_lineage(
+        df.observe(obs, *(c.alias(name) for name, c in metrics.items()))
+    )
+    return cut, obs.get

@@ -24,7 +24,10 @@ would otherwise grow by two joins per iteration and re-execute from
 the source each round.  ``cut_lineage`` picks reliable ``checkpoint``
 when a checkpoint dir is configured (the multi-executor deployment
 path — survives executor loss) and ``localCheckpoint`` in single-JVM
-local mode; see ``lineage.py``.
+local mode; see ``lineage.py``.  Loops that stop on a convergence
+test (connected_components, flatten_hierarchy) cut through
+``cut_observed`` instead: the round's cut job also returns the probe
+scalars, so no separate ``take``/``count`` job runs per round.
 
 Reference provenance: the reference has no graph operator — this is a
 north-star extension (BASELINE.json: dedup for LLM training pipelines);
@@ -37,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..lineage import cut_lineage
+from ..lineage import cut_lineage, cut_observed
 
 
 def connected_components(
@@ -79,24 +82,21 @@ def connected_components(
             .groupBy("node")
             .agg(F.min("comp").alias("nbr_min"))
         )
-        # Carry a per-node _changed flag through the checkpoint so the
-        # convergence probe is a filter over the materialized round
-        # instead of a self-join of two label tables (round-14: one
-        # join per round removed).
+        # The cut job itself counts the labels that moved this round:
+        # convergence costs no probe job over the materialized round.
         new_comp = F.least(
             F.col("comp"), F.coalesce(F.col("nbr_min"), F.col("comp"))
         )
-        new_labels = (
-            labels.join(nbr_min, on="node", how="left")
-            .select(
+        new_labels, seen = cut_observed(
+            labels.join(nbr_min, on="node", how="left").select(
                 "node",
                 new_comp.alias("comp"),
                 (new_comp != F.col("comp")).alias("_changed"),
-            )
-            .transform(cut_lineage)
+            ),
+            changed=F.count(F.when(F.col("_changed"), 1)),
         )
         labels = new_labels.select("node", "comp")
-        if not new_labels.filter(F.col("_changed")).take(1):
+        if not seen["changed"]:
             break
     edges.unpersist()
     p.unpersist()
@@ -227,20 +227,21 @@ def flatten_hierarchy(
     appear only as parents (or never appear as children) and emit
     (root, root, 0).
 
-    Iteration shape: pointer chasing by iterative equi-join — round k
-    resolves every node whose current ancestor has no parent, and the
-    unresolved frontier re-joins the (persisted) edge table.  The
-    frontier only shrinks; rounds are bounded by tree HEIGHT, not node
-    count, and each round's frontier is cut (``cut_lineage``) so the plan
-    stays flat (the connected_components / pagerank convention).  For
-    trees deeper than a few dozen levels, pointer-doubling (joining
-    the partial paths to themselves) halves the round count at the
-    cost of materializing midpoint paths — height-bounded chasing is
-    the right default for the shallow-wide hierarchies data work
-    actually meets.
+    Iteration shape: pointer doubling.  One ``(node, anc, depth, fin)``
+    table holds, per node, an ancestor ``depth`` edges up, and ``fin``
+    once that ancestor is a root.  Each round joins the unfinished rows
+    to the table itself on ``anc = node``, so the pointer jumps the
+    ancestor's own distance: 1, 2, 4, ... levels.  A tree of height H
+    takes ⌈log₂ H⌉ rounds after the initial step — 5 cuts for the
+    height-12 sf0.1 tree where a walk of one level per round took 14
+    plus a probe job each.  Every round is one ``cut_observed`` job
+    that also returns the count of unfinished rows and the deepest
+    depth, so convergence and the depth guard cost no extra job, and
+    the result is the last checkpointed table.
 
-    Raises if ``max_depth`` rounds leave an unresolved frontier — a
-    cycle, which a parent-pointer forest must not contain.
+    Raises if any node lies deeper than ``max_depth``.  A cycle never
+    finishes while its unfinished depths double each round, so it
+    raises the same way within ⌈log₂ max_depth⌉ + 1 rounds.
     """
     e = edges.select(
         F.col(child_col).alias("_c"), F.col(parent_col).alias("_p")
@@ -250,47 +251,54 @@ def flatten_hierarchy(
         .union(e.select(F.col("_p").alias("_n")))
         .distinct()
     )
-    frontier = nodes.select(
-        F.col("_n").alias("node"),
-        F.col("_n").alias("_anc"),
-        F.lit(0).cast("int").alias("depth"),
-    ).transform(cut_lineage)
-    done = None
-    for _ in range(max_depth + 1):
-        # Cut the JOINED step once per round: the resolved and frontier
-        # branches are both filters over the materialized step, so the
-        # round's join runs exactly once, and the returned `done` union
-        # reads checkpointed rounds instead of replaying every join
-        # against a by-then-unpersisted edge table (round-14: the old
-        # shape re-scanned the source once per round at consumption).
-        step = cut_lineage(
-            frontier.join(
-                e, frontier["_anc"] == e["_c"], how="left"
-            ).select(
-                "node",
-                F.col("_p").alias("_next"),
-                "depth",
-                F.col("_anc"),
+    # One step up from every node (a root points at itself), finished
+    # when that ancestor has no parent of its own.
+    step = (
+        nodes.join(e, nodes["_n"] == e["_c"], how="left")
+        .select(
+            F.col("_n").alias("node"),
+            F.coalesce("_p", "_n").alias("anc"),
+            F.when(F.col("_p").isNull(), 0).otherwise(1).alias("depth"),
+        )
+        .join(
+            e.select(F.col("_c").alias("_up")),
+            F.col("anc") == F.col("_up"),
+            how="left",
+        )
+        .select("node", "anc", "depth", F.col("_up").isNull().alias("fin"))
+    )
+    try:
+        for _ in range(max_depth.bit_length() + 1):
+            cur, seen = cut_observed(
+                step,
+                open=F.count(F.when(~F.col("fin"), 1)),
+                deepest=F.max("depth"),
             )
-        )
-        resolved = step.filter(F.col("_next").isNull()).select(
-            "node", F.col("_anc").alias("root"), "depth"
-        )
-        done = resolved if done is None else done.unionByName(resolved)
-        frontier = step.filter(F.col("_next").isNotNull()).select(
-            "node",
-            F.col("_next").alias("_anc"),
-            (F.col("depth") + 1).alias("depth"),
-        )
-        if not frontier.take(1):
-            break
-    else:
-        raise ValueError(
-            f"hierarchy deeper than max_depth={max_depth} "
-            "(or contains a cycle)"
-        )
-    e.unpersist()
-    return done
+            if (seen["deepest"] or 0) > max_depth:
+                break
+            if not seen["open"]:
+                return cur.select("node", F.col("anc").alias("root"), "depth")
+            up = cur.select(
+                F.col("node").alias("_a"),
+                F.col("anc").alias("_aa"),
+                F.col("depth").alias("_ad"),
+                F.col("fin").alias("_af"),
+            )
+            step = cur.filter("fin").unionByName(
+                cur.filter(~F.col("fin"))
+                .join(up, F.col("anc") == F.col("_a"))
+                .select(
+                    "node",
+                    F.col("_aa").alias("anc"),
+                    (F.col("depth") + F.col("_ad")).alias("depth"),
+                    F.col("_af").alias("fin"),
+                )
+            )
+    finally:
+        e.unpersist()
+    raise ValueError(
+        f"hierarchy deeper than max_depth={max_depth} (or contains a cycle)"
+    )
 
 
 def dedup_keep_best(

@@ -130,6 +130,104 @@ def test_flatten_hierarchy_forest_and_cycle_guard(spark):
         flatten_hierarchy(cyc, max_depth=5)
 
 
+def _chain(spark, height):
+    # 0 <- 1 <- ... <- height: root 0, node i at depth i
+    return spark.createDataFrame(
+        [(i, i - 1) for i in range(1, height + 1)],
+        "child long, parent long",
+    )
+
+
+def test_flatten_hierarchy_depth_guard_boundaries(spark):
+    import pytest
+
+    from blueforty___etl_data_pipeline_spark.operators.graph import (
+        flatten_hierarchy,
+    )
+
+    for max_depth in (5, 8):
+        out = {
+            r["node"]: (r["root"], r["depth"])
+            for r in flatten_hierarchy(
+                _chain(spark, max_depth), max_depth=max_depth
+            ).collect()
+        }
+        assert out == {i: (0, i) for i in range(max_depth + 1)}
+        with pytest.raises(ValueError, match="max_depth"):
+            flatten_hierarchy(
+                _chain(spark, max_depth + 1), max_depth=max_depth
+            )
+
+    one = _chain(spark, 1)
+    with pytest.raises(ValueError, match="max_depth"):
+        flatten_hierarchy(one, max_depth=0)
+    out = {
+        r["node"]: (r["root"], r["depth"])
+        for r in flatten_hierarchy(one, max_depth=1).collect()
+    }
+    assert out == {0: (0, 0), 1: (0, 1)}
+
+
+def test_flatten_hierarchy_cycle_with_tail_raises(spark):
+    import pytest
+
+    from blueforty___etl_data_pipeline_spark.operators.graph import (
+        flatten_hierarchy,
+    )
+
+    # 1 -> 2 -> 3 -> 1 is a cycle; 5 -> 4 -> 1 hangs off it, and the
+    # separate tree 11 -> 10 is well formed
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (4, 1), (5, 4), (11, 10)],
+        "child long, parent long",
+    )
+    with pytest.raises(ValueError, match="max_depth"):
+        flatten_hierarchy(edges, max_depth=40)
+
+
+def test_flatten_hierarchy_log_rounds_no_probe_jobs(spark, monkeypatch):
+    # Pointer doubling: a 1,024-node chain (height 1,023) takes
+    # ceil(log2 1023) = 10 jump rounds after the initial step, and
+    # convergence is read off each cut job, never a take/count probe.
+    import math
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from blueforty___etl_data_pipeline_spark import lineage
+    from blueforty___etl_data_pipeline_spark.operators.graph import (
+        flatten_hierarchy,
+    )
+
+    height = 1023
+    edges = _chain(spark, height).persist()
+    edges.count()
+    cuts, probes = [], []
+    orig_cut = lineage.cut_lineage
+
+    def spy_cut(df, eager=True):
+        cuts.append(eager)
+        return orig_cut(df, eager=eager)
+
+    orig_take, orig_count = DataFrame.take, DataFrame.count
+    monkeypatch.setattr(lineage, "cut_lineage", spy_cut)
+    monkeypatch.setattr(
+        DataFrame, "take", lambda self, n: probes.append("take")
+        or orig_take(self, n)
+    )
+    monkeypatch.setattr(
+        DataFrame, "count", lambda self: probes.append("count")
+        or orig_count(self)
+    )
+    out = flatten_hierarchy(edges, max_depth=height)
+    monkeypatch.undo()
+    assert len(cuts) <= math.ceil(math.log2(height)) + 1, cuts
+    assert all(cuts)
+    assert probes == []
+    got = {r["node"]: (r["root"], r["depth"]) for r in out.collect()}
+    assert got == {i: (0, i) for i in range(height + 1)}
+    edges.unpersist()
+
+
 def test_dedup_keep_best_prefers_quality_over_min_id(spark):
     from blueforty___etl_data_pipeline_spark.operators.graph import (
         dedup_keep_best,

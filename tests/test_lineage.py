@@ -24,6 +24,8 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 EDGES = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (7, 8)]
+#: (child, parent): a forest of height 5 rooted at 0 plus a stub at 10
+TREE = [(1, 0), (2, 1), (3, 2), (4, 3), (5, 4), (6, 1), (7, 0), (11, 10)]
 
 
 def test_cut_lineage_dispatches_local_without_checkpoint_dir(spark):
@@ -58,6 +60,38 @@ def test_cut_lineage_dispatches_local_without_checkpoint_dir(spark):
     assert calls == ["local"]
 
 
+def test_cut_observed_returns_exact_metrics_under_local_checkpoint(spark):
+    """The observation rides the eager localCheckpoint job: the metrics
+    are exact, the returned frame is cut, and a frame with no rows
+    still reports (count 0, max null) instead of blocking."""
+    from pyspark.sql import functions as F
+
+    from blueforty___etl_data_pipeline_spark.lineage import cut_observed
+
+    assert spark.sparkContext.getCheckpointDir() is None
+    df = spark.range(1000).select(
+        "id", (F.col("id") % 7).alias("g"), (F.col("id") % 3 == 0).alias("f")
+    )
+    cut, seen = cut_observed(
+        df.filter(F.col("id") >= 10),
+        open=F.count(F.when(~F.col("f"), 1)),
+        deepest=F.max("id"),
+        g_sum=F.sum("g"),
+    )
+    want_open = sum(1 for i in range(10, 1000) if i % 3)
+    want_g = sum(i % 7 for i in range(10, 1000))
+    assert seen == {"open": want_open, "deepest": 999, "g_sum": want_g}
+    assert "LogicalRDD" in cut._jdf.queryExecution().analyzed().toString()
+    assert cut.count() == 990
+
+    _, empty = cut_observed(
+        df.filter(F.col("id") < 0),
+        open=F.count(F.when(~F.col("f"), 1)),
+        deepest=F.max("id"),
+    )
+    assert empty == {"open": 0, "deepest": None}
+
+
 _RELIABLE_SCRIPT = """
 import json
 import os
@@ -87,6 +121,14 @@ ranks = sorted(
     (r.node, r.rank_e9)
     for r in g.pagerank_fixed_point(edges, iterations=3).collect()
 )
+# Its cuts are observed: every round's Observation must fire under the
+# reliable checkpoint too, or reading it would block forever.
+tree = sorted(
+    (r.node, r.root, r.depth)
+    for r in g.flatten_hierarchy(
+        spark.createDataFrame({tree!r}, "child long, parent long")
+    ).collect()
+)
 # Proof the RELIABLE path ran: reliable checkpoint writes rdd-*
 # directories under the checkpoint dir (localCheckpoint writes nothing).
 ckpt_files = []
@@ -95,6 +137,7 @@ for root, _dirs, files in os.walk(ckpt_dir):
 print(json.dumps({{
     "comps": comps,
     "ranks": ranks,
+    "tree": tree,
     "n_ckpt_files": len(ckpt_files),
 }}))
 spark.stop()
@@ -119,9 +162,15 @@ def test_cut_lineage_reliable_path_identical_results(spark, tmp_path):
         (r.node, r.rank_e9)
         for r in g.pagerank_fixed_point(edges, iterations=3).collect()
     )
+    expect_tree = sorted(
+        (r.node, r.root, r.depth)
+        for r in g.flatten_hierarchy(
+            spark.createDataFrame(TREE, "child long, parent long")
+        ).collect()
+    )
 
     ckpt_dir = str(tmp_path / "ckpt")
-    script = _RELIABLE_SCRIPT.format(repo=REPO, edges=EDGES)
+    script = _RELIABLE_SCRIPT.format(repo=REPO, edges=EDGES, tree=TREE)
     proc = subprocess.run(
         [sys.executable, "-c", script, ckpt_dir],
         capture_output=True,
@@ -134,5 +183,6 @@ def test_cut_lineage_reliable_path_identical_results(spark, tmp_path):
 
     assert [tuple(t) for t in got["comps"]] == expect_comps
     assert [tuple(t) for t in got["ranks"]] == expect_ranks
+    assert [tuple(t) for t in got["tree"]] == expect_tree
     # The reliable checkpoint actually materialized to the dir.
     assert got["n_ckpt_files"] > 0

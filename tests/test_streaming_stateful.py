@@ -528,9 +528,9 @@ def test_stream_partition_scope_is_adaptive_and_restores(spark, tmp_path):
     # Round-15 (guide §2.1/§2.2, VERDICT r14 #2): streaming drains pin
     # their state-store partition count to spark.sql.shuffle.partitions
     # at start, so the entry scopes a scale-adaptive value around each
-    # drain.  Pin the derivation (floor 8, ~32 MB/partition, capped at
-    # the session conf, env override wins) and that the scope restores
-    # the session value even on error.
+    # drain.  Pin the derivation (floor min(8, cores), ~32 MB/partition,
+    # capped at the session conf, env override wins) and that the scope
+    # restores the session value even on error.
     import os as _os
 
     from __spark_entry__ import (
@@ -540,27 +540,29 @@ def test_stream_partition_scope_is_adaptive_and_restores(spark, tmp_path):
 
     src = str(tmp_path / "staged")
     spark.range(10).write.parquet(src)
-    # tiny staged source -> the floor (8: profiled at sf0.1, see
-    # _stream_partitions_for)
-    assert _stream_partitions_for(src, 32) == 8
+    # tiny staged source -> the floor (8 with 8+ cores: profiled at
+    # sf0.1, see _stream_partitions_for)
+    assert _stream_partitions_for(src, 32, 32) == 8
     # capped at the session's configured value
-    assert _stream_partitions_for(src, 2) == 2
+    assert _stream_partitions_for(src, 2, 32) == 2
     # ~32 MB per partition once the source is big (synthesized sizes)
     big = str(tmp_path / "big")
     _os.makedirs(big)
     with open(_os.path.join(big, "part-0"), "wb") as f:
         f.truncate(400 << 20)  # sparse 400 MB
-    assert _stream_partitions_for(big, 32) == 13
-    assert _stream_partitions_for(big, 4) == 4
+    assert _stream_partitions_for(big, 32, 32) == 13
+    assert _stream_partitions_for(big, 4, 32) == 4
     # env override wins
     _os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"] = "9"
     try:
-        assert _stream_partitions_for(src, 32) == 9
+        assert _stream_partitions_for(src, 32, 32) == 9
     finally:
         del _os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"]
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    expected = str(_stream_partitions_for(src, int(before)))
+    expected = str(_stream_partitions_for(
+        src, int(before), spark.sparkContext.defaultParallelism
+    ))
     with _scoped_stream_partitions(spark, src):
         assert (
             spark.conf.get("spark.sql.shuffle.partitions") == expected
@@ -572,3 +574,62 @@ def test_stream_partition_scope_is_adaptive_and_restores(spark, tmp_path):
     except RuntimeError:
         pass
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_stream_partition_floor_follows_cores(tmp_path):
+    # Below 8 cores the floor drops to one wave of tasks per core; at 8
+    # cores and above it stays 8.
+    from __spark_entry__ import _stream_partitions_for
+
+    src = tmp_path / "staged"
+    src.mkdir()
+    (src / "part-0.parquet").write_bytes(b"x" * 100)
+    assert _stream_partitions_for(str(src), 32, 1) == 1
+    assert _stream_partitions_for(str(src), 32, 4) == 4
+    assert _stream_partitions_for(str(src), 32, 8) == 8
+    assert _stream_partitions_for(str(src), 32, 32) == 8
+    # a size-derived count above the floor is unaffected by cores
+    with open(src / "part-1.parquet", "wb") as f:
+        f.truncate(400 << 20)  # sparse 400 MB
+    assert _stream_partitions_for(str(src), 32, 4) == 13
+    # a source that cannot be listed keeps the session value
+    assert _stream_partitions_for(str(tmp_path / "missing"), 32, 4) == 32
+
+
+def test_stream_partition_env_parse_never_raises(tmp_path, monkeypatch):
+    from __spark_entry__ import _stream_partitions_for
+
+    src = tmp_path / "staged"
+    src.mkdir()
+    (src / "part-0.parquet").write_bytes(b"x" * 100)
+    for bad in ("", "eight", "8.5", " "):
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", bad)
+        assert _stream_partitions_for(str(src), 32, 4) == 4
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "0")
+    assert _stream_partitions_for(str(src), 32, 4) == 1
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", " 12 ")
+    assert _stream_partitions_for(str(src), 32, 4) == 12
+
+
+def test_stream_partition_size_counts_every_data_file(tmp_path):
+    # Sources written by other tools name their files freely and may be
+    # partitioned into k=v subdirectories; Spark reads all of them.
+    # Names starting with "_" or "." (markers, checksums, metadata
+    # dirs) are not data and are not counted.
+    from __spark_entry__ import _stream_partitions_for
+
+    src = tmp_path / "staged"
+    (src / "day=1").mkdir(parents=True)
+    (src / "_spark_metadata").mkdir()
+    for rel, mb in (
+        ("data-0.parquet", 100),
+        ("day=1/chunk.snappy.parquet", 100),
+        ("_SUCCESS", 400),
+        (".data-0.parquet.crc", 400),
+        ("_spark_metadata/0", 400),
+    ):
+        with open(src / rel, "wb") as f:
+            f.truncate(mb << 20)  # sparse
+    # 200 MB of data files -> 200 // 32 + 1 = 7 partitions above a
+    # floor of 4; the 1.2 GB of non-data files would have given 45.
+    assert _stream_partitions_for(str(src), 64, 4) == 7
