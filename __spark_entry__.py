@@ -20799,560 +20799,11 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_reconciliation(spark, "/root/testdata/sf0.001")
 
 
-#: Round-13 driver-window lead (the driver signs the FIRST 50 entries
-#: of queries()), executing the rotation plan declared in COVERAGE.md:
-#: first the two queries whose ENGINE code changed this round (the
-#: ADVICE-r12 division-parity revert in operators/analytics._truncdiv —
-#: DuckDB integer `//` truncates, so the r12 floor "fix" was itself
-#: the divergence; both re-verified green against the sf0.01 oracle at
-#: change time), then the four oracle-robustness promotions from the
-#: round-13 whitespace-tokenization audit (oracles re-tokenized on
-#: \\s+ / whitespace-collapsed to match the engine's tokens_ws /
-#: strip_latex contracts; the two other changed oracles, bm25_search
-#: and build_vocab, already sit in the r4 head below, and oov_rate in
-#: the r12-additions block — all six re-verified green BOTH on the
-#: real sf0.01 fixtures and on a doctored tab/newline/multi-space
-#: variant), then the two edge-fixture oracle fixes (empty/blank
-#: documents: augment_dropout, mbox_extract — tools/fragility_audit.py
-#: edge mode), then the twelve round-12 additions that have never
-#: carried a driver-signed row (all 12 judge-verified green in VERDICT
-#: r12's bare sweep; three of them — streaming_ewma, hits_scores,
-#: oov_rate — also had code/oracle robustness fixes this round), then
-#: the 22 queries whose latest signature is round 3, then the
-#: alphabetical head (8 of 48) of the r4-signed block.  The remaining
-#: 40 r4 names lead the round-14 window.
-#: Round-14 driver-window lead, executing the COVERAGE.md rotation
-#: with the declared precedence (changed queries promote to the window
-#: head at change time; displaced rotation names roll forward):
-#:
-#: 1. The 17 graph-backed queries whose ENGINE code changed (every
-#:    operators/graph.py lineage cut routes through
-#:    lineage.cut_lineage — reliable checkpoint when a checkpoint dir
-#:    is set, localCheckpoint otherwise).
-#: 2. The 19 queries whose ENGINE code changed in the round-14
-#:    NULL-text contract adoption (token counters on NULL-propagating
-#:    array_size — never legacy size's -1 — NULL-guarded transforms,
-#:    exact-Int64 Arrow simhash batches; gated by
-#:    tools/fragility_audit.py null mode, 44/44 + media-raise checks).
-#: 3. The oldest-driver-signature names from the vertical-tab
-#:    whitespace-class oracle wave (every DuckDB-oracle \s — split,
-#:    collapse, negated punct classes — replaced by the explicit
-#:    Java-semantics class [ \t\n\x0b\f\r]; ws audit now injects
-#:    VT bytes, 30/30).  The shared helpers fan the two waves out to
-#:    92 changed names — more than one 50-slot window — so the
-#:    remaining 42 changed names (r5-r13 signatures, oldest first)
-#:    are the declared round-15 window head, ahead of the 31
-#:    unchanged r4-signed rotation names; ALL 92 were bare-verified
-#:    green against the sf0.01 oracle at change time this round (see
-#:    COVERAGE.md round-14 section).
-_R14_WINDOW = [
-    # -- 1. engine code: cut_lineage swap (17) -------------------------
-    "near_dup_components", "near_dup_dedup", "pagerank",
-    "dedup_keep_best", "dedup_report", "image_dedup",
-    "flatten_hierarchy", "triangle_count", "k_core",
-    "label_propagation", "bfs_hops", "hits_scores",
-    "graph_assortativity", "clustering_coeff", "adamic_adar",
-    "link_prediction", "density_clusters",
-    # -- 2. engine code: NULL-text contract consumers (19) -------------
-    "assign_packs", "assign_packs_scalable", "augment_dropout",
-    "bucketed_packs", "chunk_documents", "contrastive_pairs",
-    "corpus_report", "html_extract", "mix_sources",
-    "ngram_model_score", "quality_filter", "readability",
-    "remove_duplicate_spans", "select_until_budget", "simhash",
-    "simhash_pairs", "temperature_mix", "text_quality",
-    "token_counts",
-    # -- 3. oracle-only changes, oldest driver signature first (5) -----
-    "duplicate_spans", "lsh_dedup_incremental", "simhash_expr",
-    "span_dup_stats", "training_pipeline",
-    # -- 4. zero-row-slice hardening, wave 1: the four changed names
-    # whose new code/oracle EXECUTES on the non-empty driver fixture
-    # (IVF _schema sidecar read; grouped point-estimate agg; empty-
-    # safe seed collect + EXISTS-guarded oracle; HAVING grand-total
-    # pin). ------------------------------------------------------------
-    "ann_ivf_indexed", "bootstrap_ci", "kcenter_coreset", "rollup",
-    # -- 5. zero-row-slice hardening, wave 2 (orders/customer/dims
-    # stages): the five changed names with result-path changes that
-    # execute on the non-empty fixture — CTAS read now prefers the
-    # _schema sidecar; constraint sums coalesce to 0; profile reprs
-    # NULL-guard the Java Formatter "nu" bug; Holt fold and the
-    # permutation counter moved to constant-key grouped aggregates.
-    # The remaining changed names (dir-hygiene / fallback-path only)
-    # head the r15 queue — see COVERAGE.md round-14 section. -----------
-    "ctas_roundtrip", "constraint_violations", "profile_table",
-    "holt_forecast", "permutation_test",
-]
-
-
-_R13_WINDOW = [
-    # -- round-13 engine-code changes (ADVICE r12 trunc-div revert) ----
-    "ips_eval", "cuped_eval",
-    # -- round-13 oracle robustness fixes (whitespace-tokenization
-    # audit on doctored tab/newline/multi-space documents — the other
-    # two changed oracles, bm25_search and build_vocab, are already
-    # below in the r4 head; oov_rate is in the r12-additions block) ---
-    "jaccard_prefix_join", "rare_tokens", "naive_bayes", "latex_strip",
-    # -- round-13 edge-fixture oracle fixes (empty/blank documents:
-    # DuckDB array_to_string([]) NULL vs Spark '' in augment_dropout;
-    # mbox reader trailing-newline rstrip in mbox_extract) -------------
-    "augment_dropout", "mbox_extract",
-    # -- round-12 additions, never driver-signed (12) ------------------
-    "hits_scores", "graph_assortativity", "herfindahl_index",
-    "ewma_smooth", "clustering_coeff", "adamic_adar", "prop_ztest",
-    "streaming_ewma", "oov_rate", "anova_f", "cross_correlation",
-    "sax_symbols",
-    # -- latest signature round 3 (22) ---------------------------------
-    "kmeans_train", "market_share", "merge_upsert",
-    "minhash_signatures", "multimodal_features", "orc_roundtrip",
-    "order_by_limit", "pagerank", "profile_table",
-    "quantize_embeddings", "reconciliation", "resample_ffill",
-    "scd2_history", "session_window", "sessionize",
-    "stratified_sample", "streaming_tumbling", "top1_per_group",
-    "tumbling_window", "volume_shipping", "waiting_suppliers",
-    "xml_shred",
-    # -- latest signature round 4, head of the block (8 of 48) ---------
-    "ann_ivf_indexed", "ann_rrf", "assign_packs",
-    "assign_packs_scalable", "below_avg_filter", "bm25_search",
-    "build_vocab", "collect_sorted",
-]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Ordered so the driver's 50-query correctness window carries the
-    most NEW signal each round: the round-14 window (_R14_WINDOW — the
-    cut_lineage graph promotions, then the whitespace-class oracle wave
-    oldest-signature-first per the COVERAGE.md rotation plan) leads,
-    then the round-13 window order, then the prior queue order."""
-    base = _queries_r10_order()
-    out = {name: base[name] for name in _R14_WINDOW}
-    out.update({name: base[name] for name in _R13_WINDOW})
-    out.update(base)
-    return out
-
-
-def _queries_r10_order() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Round-10 layout (kept as the stable tail order):
-
-    - the 14 round-9 late additions that had never carried a
-      driver-signed CORRECTNESS row lead (all 14 judge-verified green
-      in VERDICT r9's bare-session sweep).
-    - round-10 queries right after, so they also landed inside the
-      50-query window.
-    - then everything driver-signed green in rounds 2-9, prior order
-      preserved (the round-9 window block first, then the r2-r8
-      queue).
-    """
-    return {
-        # -- round-10 driver window: the 14 round-9 late additions
-        # never driver-signed (judge-verified green in VERDICT r9) ----
-        "cross_source_dups": q_cross_source_dups,
-        "kmv_overlap": q_kmv_overlap,
-        "ngram_search": q_ngram_search,
-        "latex_strip": q_latex_strip,
-        "bitext_mine": q_bitext_mine,
-        "stl_decompose": q_stl_decompose,
-        "kcenter_coreset": q_kcenter_coreset,
-        "bpe_fertility": q_bpe_fertility,
-        "blocking_eval": q_blocking_eval,
-        "streaming_enrich": q_streaming_enrich,
-        "streaming_upsert": q_streaming_upsert,
-        "image_patches_real": q_image_patches_real,
-        "audio_resample_real": q_audio_resample_real,
-        "rfm_segments": q_rfm_segments,
-        # -- round-10 session additions land here (inside the window) --
-        "global_rank": q_global_rank,
-        "fim_transform": q_fim_transform,
-        "streaming_outer_join": q_streaming_outer_join,
-        "winnow_fingerprints": q_winnow_fingerprints,
-        "isotonic_calibration": q_isotonic_calibration,
-        "rendezvous_shards": q_rendezvous_shards,
-        "aiff_meta_real": q_aiff_meta_real,
-        "pcap_extract": q_pcap_extract,
-        "tfrecord_roundtrip": q_tfrecord_roundtrip,
-        "ulid_generate": q_ulid_generate,
-        "shuffle_quality": q_shuffle_quality,
-        "randomized_response": q_randomized_response,
-        "cdc_chunks": q_cdc_chunks,
-        "facility_location": q_facility_location,
-        "quantile_normalize": q_quantile_normalize,
-        "skyline": q_skyline,
-        "label_propagation": q_label_propagation,
-        "bfs_hops": q_bfs_hops,
-        "gaps_islands": q_gaps_islands,
-        "woe_encoding": q_woe_encoding,
-        "lof_outliers": q_lof_outliers,
-        "mutual_info": q_mutual_info,
-        "weighted_topk_sample": q_weighted_topk_sample,
-        "fs_weights": q_fs_weights,
-        "pca_project": q_pca_project,
-        "grouped_mode": q_grouped_mode,
-        "rake_keywords": q_rake_keywords,
-        "sequence_gaps": q_sequence_gaps,
-        "allen_relations": q_allen_relations,
-        "skipgram_pairs": q_skipgram_pairs,
-        "fd_check": q_fd_check,
-        "streaming_topk": q_streaming_topk,
-        "good_turing": q_good_turing,
-        "ips_eval": q_ips_eval,
-        "zipf_fit": q_zipf_fit,
-        "nelson_aalen": q_nelson_aalen,
-        "term_burstiness": q_term_burstiness,
-        "transition_entropy": q_transition_entropy,
-        "centroid_novelty": q_centroid_novelty,
-        "cuped_eval": q_cuped_eval,
-        "sorted_neighborhood": q_sorted_neighborhood,
-        "maxsim_retrieval": q_maxsim_retrieval,
-        "resample_interp": q_resample_interp,
-        "fair_interleave": q_fair_interleave,
-        # ---- driver-signed green r2-r9; prior order preserved --------
-        "holt_forecast": q_holt_forecast,
-        "xlsx_roundtrip": q_xlsx_roundtrip,
-        "domain_rollup": q_domain_rollup,
-        "avro_roundtrip": q_avro_roundtrip,
-        "fixed_width_roundtrip": q_fixed_width_roundtrip,
-        "parquet_stats": q_parquet_stats,
-        "point_in_polygon": q_point_in_polygon,
-        "merge_intervals": q_merge_intervals,
-        "schema_evolution": q_schema_evolution,
-        "mahalanobis": q_mahalanobis,
-        "golden_record": q_golden_record,
-        "media_sniff": q_media_sniff,
-        "mp4_frames_real": q_mp4_frames_real,
-        "url_dedup": q_url_dedup,
-        "m4a_meta_real": q_m4a_meta_real,
-        "vtt_parse_real": q_vtt_parse_real,
-        "mkv_frames_real": q_mkv_frames_real,
-        "ogg_meta_real": q_ogg_meta_real,
-        "robots_audit": q_robots_audit,
-        "webdataset_roundtrip": q_webdataset_roundtrip,
-        "id3_tags_real": q_id3_tags_real,
-        "charset_sniff": q_charset_sniff,
-        "docx_extract": q_docx_extract,
-        "warc_gz_roundtrip": q_warc_gz_roundtrip,
-        "embargo_split": q_embargo_split,
-        "ip_anonymize": q_ip_anonymize,
-        "join_skew": q_join_skew,
-        "matryoshka_eval": q_matryoshka_eval,
-        "lag_features": q_lag_features,
-        "warc_http_roundtrip": q_warc_http_roundtrip,
-        "sqlite_roundtrip": q_sqlite_roundtrip,
-        "pdf_extract": q_pdf_extract,
-        "arrow_ipc_roundtrip": q_arrow_ipc_roundtrip,
-        "mbox_extract": q_mbox_extract,
-        "kaplan_meier": q_kaplan_meier,
-        "webp_meta_real": q_webp_meta_real,
-        "heaps_law": q_heaps_law,
-        "xz_jsonl_roundtrip": q_xz_jsonl_roundtrip,
-        "media_pipeline": q_media_pipeline,
-        "approx_profile": q_approx_profile,
-        # -- round-9 session additions (inside the driver window) -------
-        "ngram_novelty": q_ngram_novelty,
-        "dsir_importance": q_dsir_importance,
-        "t_closeness": q_t_closeness,
-        "audio_frames_real": q_audio_frames_real,
-        "image_histogram_real": q_image_histogram_real,
-        "zip_roundtrip": q_zip_roundtrip,
-        "mase_eval": q_mase_eval,
-        "bloom_semi_join": q_bloom_semi_join,
-        "group_kfold": q_group_kfold,
-        "lateness_profile": q_lateness_profile,
-        "ab_test": q_ab_test,
-        "split_leakage": q_split_leakage,
-        "video_frames_real": q_video_frames_real,
-        "wap_publish": q_wap_publish,
-        "jpeg_color_real": q_jpeg_color_real,
-        "png_color_real": q_png_color_real,
-        "cluster_eval": q_cluster_eval,
-        "zstd_roundtrip": q_zstd_roundtrip,
-        "g711_decode_real": q_g711_decode_real,
-        "raster_decode_real": q_raster_decode_real,
-        "tiff_decode_real": q_tiff_decode_real,
-        "adpcm_decode_real": q_adpcm_decode_real,
-        "cms_frequency": q_cms_frequency,
-        "kmv_distinct": q_kmv_distinct,
-        "geohash_tiles": q_geohash_tiles,
-        "acf_daily": q_acf_daily,
-        "midi_decode_real": q_midi_decode_real,
-        "theil_sen": q_theil_sen,
-        "webdataset_export": q_webdataset_export,
-        "unicode_normalize": q_unicode_normalize,
-        "jackknife_se": q_jackknife_se,
-        "cohens_kappa": q_cohens_kappa,
-        "hashed_features": q_hashed_features,
-        "permutation_test": q_permutation_test,
-        "markdown_strip": q_markdown_strip,
-        "approx_quantile_contract": q_approx_quantile_contract,
-        "k_core": q_k_core,
-        "chi2_independence": q_chi2_independence,
-        "luhn_mask": q_luhn_mask,
-        "k_anonymize": q_k_anonymize,
-        "spearman": q_spearman,
-        "mann_whitney": q_mann_whitney,
-        "ks_test": q_ks_test,
-        "target_encode": q_target_encode,
-        "hilbert_key": q_hilbert_key,
-        "mp3_meta_real": q_mp3_meta_real,
-        "bmp_decode_real": q_bmp_decode_real,
-        "exif_extract_real": q_exif_extract_real,
-        "warc_roundtrip": q_warc_roundtrip,
-        "ols_regression": q_ols_regression,
-        "link_prediction": q_link_prediction,
-        "kendall_tau": q_kendall_tau,
-        "gini_gain": q_gini_gain,
-        "calibration": q_calibration,
-        "bootstrap_ci": q_bootstrap_ci,
-        "readability": q_readability,
-        "srt_parse_real": q_srt_parse_real,
-        "image_phash": q_image_phash,
-        "naive_bayes": q_naive_bayes,
-        "density_clusters": q_density_clusters,
-        "order_totals": q_order_totals,
-        "streaming_sliding": q_streaming_sliding,
-        "contrastive_pairs": q_contrastive_pairs,
-        "language_confusion": q_language_confusion,
-        "seasonality": q_seasonality,
-        "source_keywords": q_source_keywords,
-        "doc_features": q_doc_features,
-        "sequence_match": q_sequence_match,
-        "decayed_sum": q_decayed_sum,
-        "normalized_dup_gain": q_normalized_dup_gain,
-        "quantile_bins": q_quantile_bins,
-        "dedup_keep_best": q_dedup_keep_best,
-        "contingency": q_contingency,
-        "running_distinct": q_running_distinct,
-        "jdbc_roundtrip": q_jdbc_roundtrip,
-        "jpeg_decode_real": q_jpeg_decode_real,
-        "ann_ndcg": q_ann_ndcg,
-        "quality_roc": q_quality_roc,
-        "shuffle_shards": q_shuffle_shards,
-        "pq_encode": q_pq_encode,
-        "pq_search": q_pq_search,
-        "record_linkage": q_record_linkage,
-        "materialize_epoch": q_materialize_epoch,
-        "image_dhash_pairs": q_image_dhash_pairs,
-        "epoch_pipeline": q_epoch_pipeline,
-        "row_diff": q_row_diff,
-        "pareto_front": q_pareto_front,
-        "frequent_pairs": q_frequent_pairs,
-        "ivf_pq_search": q_ivf_pq_search,
-        "image_dedup": q_image_dedup,
-        "versioned_roundtrip": q_versioned_roundtrip,
-        "cdc_rollup": q_cdc_rollup,
-        "augment_dropout": q_augment_dropout,
-        "k_anonymity": q_k_anonymity,
-        "twap": q_twap,
-        "ohlc": q_ohlc,
-        "gini": q_gini,
-        "benford": q_benford,
-        "observed_write": q_observed_write,
-        "schema_drift": q_schema_drift,
-        "clustered_write": q_clustered_write,
-        "triangle_count": q_triangle_count,
-        "l_diversity": q_l_diversity,
-        "corr_matrix": q_corr_matrix,
-        "cusum_shift": q_cusum_shift,
-        "hll_distinct": q_hll_distinct,
-        "url_extract": q_url_extract,
-        "jpeg_progressive_real": q_jpeg_progressive_real,
-        "gif_frames_real": q_gif_frames_real,
-        "flac_decode_real": q_flac_decode_real,
-        "bpe_train": q_bpe_train,
-        "bpe_segment": q_bpe_segment,
-        "winsorize": q_winsorize,
-        "streaming_join": q_streaming_join,
-        "action_sequences": q_action_sequences,
-        "negative_samples": q_negative_samples,
-        "corpus_report": q_corpus_report,
-        "ngram_model_score": q_ngram_model_score,
-        "streaming_dedup": q_streaming_dedup,
-        "promo_revenue": q_promo_revenue,
-        "top_supplier": q_top_supplier,
-        "min_cost_supplier": q_min_cost_supplier,
-        "forecast_revenue": q_forecast_revenue,
-        "important_parts": q_important_parts,
-        "promo_suppliers": q_promo_suppliers,
-        "minhash_lsh_pairs_expr": q_minhash_lsh_pairs_expr,
-        "semantic_dedup": q_semantic_dedup,
-        "remove_duplicate_spans": q_remove_duplicate_spans,
-        "temperature_mix": q_temperature_mix,
-        "skew_report": q_skew_report,
-        "token_entropy": q_token_entropy,
-        "tokenize_pack": q_tokenize_pack,
-        "interval_concurrency": q_interval_concurrency,
-        "incremental_recompute": q_incremental_recompute,
-        "audio_decode_real": q_audio_decode_real,
-        "mad_outliers": q_mad_outliers,
-        "ann_lsh_multi": q_ann_lsh_multi,
-        "action_transitions": q_action_transitions,
-        "contamination_report": q_contamination_report,
-        "attribution": q_attribution,
-        "heavy_hitters": q_heavy_hitters,
-        "fk_containment": q_fk_containment,
-        "flatten_hierarchy": q_flatten_hierarchy,
-        "dedup_report": q_dedup_report,
-        "hybrid_search": q_hybrid_search,
-        "streaming_ingest": q_streaming_ingest,
-        "table_digest": q_table_digest,
-        "lsh_recall": q_lsh_recall,
-        "power_iteration": q_power_iteration,
-        "group_split": q_group_split,
-        "merge_aggregate": q_merge_aggregate,
-        "bucketed_packs": q_bucketed_packs,
-        "sql_interface": q_sql_interface,
-        "image_augment_real": q_image_augment_real,
-        "dup_weights": q_dup_weights,
-        "collocations": q_collocations,
-        "ann_mrr": q_ann_mrr,
-        "containment_pairs": q_containment_pairs,
-        "daily_anomalies": q_daily_anomalies,
-        "multimodal_decode_real": q_multimodal_decode_real,
-        "assign_packs": q_assign_packs,
-        "assign_packs_scalable": q_assign_packs_scalable,
-        "word_stats": q_word_stats,
-        "grouped_median": q_grouped_median,
-        "histogram": q_histogram,
-        "bm25_search": q_bm25_search,
-        "duplicate_spans": q_duplicate_spans,
-        "span_dup_stats": q_span_dup_stats,
-        "mix_sources": q_mix_sources,
-        "select_until_budget": q_select_until_budget,
-        "simhash_expr": q_simhash_expr,
-        "lsh_dedup_incremental": q_lsh_dedup_incremental,
-        "streaming_session": q_streaming_session,
-        "streaming_user_stats": q_streaming_user_stats,
-        "ann_ivf_indexed": q_ann_ivf_indexed,
-        "snapshot_diff": q_snapshot_diff,
-        "training_pipeline": q_training_pipeline,
-        "ann_rrf": q_ann_rrf,
-        "weighted_sample": q_weighted_sample,
-        "product_profit": q_product_profit,
-        "grouped_quantiles": q_grouped_quantiles,
-        "iqr_outliers": q_iqr_outliers,
-        "constraint_violations": q_constraint_violations,
-        "having_filter": q_having_filter,
-        "count_distinct_agg": q_count_distinct_agg,
-        "null_safe_join": q_null_safe_join,
-        "below_avg_filter": q_below_avg_filter,
-        "collect_sorted": q_collect_sorted,
-        "range_frame_window": q_range_frame_window,
-        "exists_subquery": q_exists_subquery,
-        "scalar_subquery": q_scalar_subquery,
-        "line_dedup": q_line_dedup,
-        "ntile_windows": q_ntile_windows,
-        "salted_join": q_salted_join,
-        "repetition_signals": q_repetition_signals,
-        "build_vocab": q_build_vocab,
-        "zscore": q_zscore,
-        "html_extract": q_html_extract,
-        "rare_tokens": q_rare_tokens,
-        "embedding_dim_profile": q_embedding_dim_profile,
-        "distribution_drift": q_distribution_drift,
-        "zorder_key": q_zorder_key,
-        "variant_extract": q_variant_extract,
-        "returned_items": q_returned_items,
-        "priority_shipmode": q_priority_shipmode,
-        "customer_distribution": q_customer_distribution,
-        "disjunctive_pred": q_disjunctive_pred,
-        "xml_shred": q_xml_shred,
-        "reconciliation": q_reconciliation,
-        "top1_per_group": q_top1_per_group,
-        "tumbling_window": q_tumbling_window,
-        "session_window": q_session_window,
-        "minhash_signatures": q_minhash_signatures,
-        "streaming_tumbling": q_streaming_tumbling,
-        "ann_brute_force": q_ann_brute_force,
-        "ann_lsh": q_ann_lsh,
-        "ann_ivf": q_ann_ivf,
-        "ann_recall": q_ann_recall,
-        "embedding_near_dup": q_embedding_near_dup,
-        "kmeans_assign": q_kmeans_assign,
-        "kmeans_train": q_kmeans_train,
-        "quantize_embeddings": q_quantize_embeddings,
-        "contamination_hits": q_contamination_hits,
-        "decontaminate": q_decontaminate,
-        "fuzzy_join": q_fuzzy_join,
-        "jaccard_prefix_join": q_jaccard_prefix_join,
-        "stratified_sample": q_stratified_sample,
-        "multimodal_features": q_multimodal_features,
-        "frame_sample": q_frame_sample,
-        "csv_roundtrip": q_csv_roundtrip,
-        "filename_partition": q_filename_partition,
-        "ctas_roundtrip": q_ctas_roundtrip,
-        "jsonl_roundtrip": q_jsonl_roundtrip,
-        "orc_roundtrip": q_orc_roundtrip,
-        "compact_roundtrip": q_compact_roundtrip,
-        "merge_upsert": q_merge_upsert,
-        "gdpr_delete": q_gdpr_delete,
-        "sessionize": q_sessionize,
-        "funnel": q_funnel,
-        "cohort_retention": q_cohort_retention,
-        "pagerank": q_pagerank,
-        "scd2_history": q_scd2_history,
-        "grouping_sets": q_grouping_sets,
-        "resample_ffill": q_resample_ffill,
-        "order_by_limit": q_order_by_limit,
-        "cube_agg": q_cube_agg,
-        "profile_table": q_profile_table,
-        "volume_shipping": q_volume_shipping,
-        "market_share": q_market_share,
-        "waiting_suppliers": q_waiting_suppliers,
-        "pricing_summary": q_pricing_summary,
-        "shipping_priority": q_shipping_priority,
-        "local_supplier_volume": q_local_supplier_volume,
-        "outer_join_agg": q_outer_join_agg,
-        "semi_anti_join": q_semi_anti_join,
-        "set_ops": q_set_ops,
-        "rollup": q_rollup,
-        "window_analytics": q_window_analytics,
-        "pivot": q_pivot,
-        "unpivot": q_unpivot,
-        "distinct": q_distinct,
-        "topk_per_group": q_topk_per_group,
-        "argmin_agg": q_argmin_agg,
-        "composite_key_join": q_composite_key_join,
-        "closest_stations": q_closest_stations,
-        "closest_stations_grid": q_closest_stations_grid,
-        "cleaning_scalars": q_cleaning_scalars,
-        "json_flatten": q_json_flatten,
-        "asof_join": q_asof_join,
-        "range_join": q_range_join,
-        "sliding_window": q_sliding_window,
-        "exact_dup_groups": q_exact_dup_groups,
-        "minhash_lsh_pairs": q_minhash_lsh_pairs,
-        "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-        "simhash": q_simhash,
-        "simhash_pairs": q_simhash_pairs,
-        "near_dup_components": q_near_dup_components,
-        "near_dup_dedup": q_near_dup_dedup,
-        "text_quality": q_text_quality,
-        "token_counts": q_token_counts,
-        "language_id": q_language_id,
-        "fingerprints": q_fingerprints,
-        "normalize_text": q_normalize_text,
-        "scrub_pii": q_scrub_pii,
-        "chunk_documents": q_chunk_documents,
-        "top_ngrams": q_top_ngrams,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "tfidf_doc_similarity": q_tfidf_doc_similarity,
-        "hash_sample": q_hash_sample,
-        "hash_split": q_hash_split,
-        "quota_cap": q_quota_cap,
-        "quality_filter": q_quality_filter,
-        # -- round-12 additions (tail of this round's queue; DECLARED
-        # to lead the round-13 window in COVERAGE.md — the two-round
-        # signing invariant; each bare-verified green at add time) ----
-        "hits_scores": q_hits_scores,
-        "graph_assortativity": q_graph_assortativity,
-        "herfindahl_index": q_herfindahl_index,
-        "ewma_smooth": q_ewma_smooth,
-        "clustering_coeff": q_clustering_coeff,
-        "adamic_adar": q_adamic_adar,
-        "prop_ztest": q_prop_ztest,
-        "streaming_ewma": q_streaming_ewma,
-        "oov_rate": q_oov_rate,
-        "anova_f": q_anova_f,
-        "cross_correlation": q_cross_correlation,
-        "sax_symbols": q_sax_symbols,
-    }
+    """Every ``q_<name>`` builder in this module, keyed by ``<name>``, in
+    source order.  Defining ``q_<name>`` is what declares a query."""
+    return {name[2:]: fn for name, fn in globals().items()
+            if name.startswith("q_") and callable(fn)}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -25,586 +25,14 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import __spark_entry__ as entrymod
 from blueforty___etl_data_pipeline_spark.session import get_spark
 
-#: Headline subset: one per operator family, weighted toward the
-#: shuffle/join/window-heavy plans that dominate at scale.
-HEADLINE = [
-    "order_totals",
-    "reconciliation",
-    "pricing_summary",
-    "shipping_priority",
-    "local_supplier_volume",
-    "volume_shipping",
-    "market_share",
-    "returned_items",
-    "customer_distribution",
-    "min_cost_supplier",
-    "important_parts",
-    "waiting_suppliers",
-    "top1_per_group",
-    "argmin_agg",
-    "composite_key_join",
-    "closest_stations",
-    "closest_stations_grid",
-    "cleaning_scalars",
-    "xml_shred",
-    "asof_join",
-    "range_join",
-    "tumbling_window",
-    "sliding_window",
-    "session_window",
-    "streaming_tumbling",
-    "exact_dup_groups",
-    "minhash_lsh_pairs",
-    # minhash_lsh_pairs_expr (the no-Arrow JVM-fold fallback) stays
-    # correctness-gated against the shared oracle but is not benched:
-    # the engine's chosen path IS the Arrow default above (the fallback
-    # is ~4.5x slower by design and would only measure a path no
-    # deployment with Arrow ever takes).
-    "simhash",
-    "simhash_pairs",
-    "embedding_near_dup",
-    "near_dup_dedup",
-    "embedding_dim_profile",
-    # jaccard_prefix_join is correctness-gated but benched only at
-    # sf0.01: the synthetic fixture's flat 40-token vocabulary is the
-    # documented worst case for prefix filtering (no rarity skew), so
-    # its sf0.1 runtime measures the fixture, not the operator.
-    "text_quality",
-    "scrub_pii",
-    "hash_split",
-    "quota_cap",
-    "fingerprints",
-    "ann_brute_force",
-    "ann_lsh",
-    "ann_ivf",
-    "ann_recall",
-    "multimodal_features",
-    "word_stats",
-    "chunk_documents",
-    "html_extract",
-    "rare_tokens",
-    "bm25_search",
-    "top_ngrams",
-    "tfidf_top_terms",
-    "grouped_median",
-    "histogram",
-    "profile_table",
-    "contamination_hits",
-    "decontaminate",
-    "grouped_quantiles",
-    "iqr_outliers",
-    "exists_subquery",
-    "scalar_subquery",
-    "ntile_windows",
-    "line_dedup",
-    "kmeans_assign",
-    "fuzzy_join",
-    "quantize_embeddings",
-    "approx_profile",
-    "salted_join",
-    "repetition_signals",
-    "assign_packs_scalable",
-    # the composed 5-stage pipeline (quality→dedup→decon→split→pack):
-    # the engine's representative nightly workload, one lazy plan
-    "training_pipeline",
-    "sessionize",
-    "funnel",
-    "cohort_retention",
-    "kmeans_train",
-    "build_vocab",
-    "zscore",
-    "variant_extract",
-    # round-3 additions, benched since round 4 so regressions in new
-    # code are visible (VERDICT r3 item 7)
-    "duplicate_spans",
-    "span_dup_stats",
-    "mix_sources",
-    "select_until_budget",
-    "weighted_sample",
-    "lsh_dedup_incremental",
-    "ann_rrf",
-    "ann_ivf_indexed",
-    "snapshot_diff",
-    "simhash_expr",
-    "constraint_violations",
-    "distribution_drift",
-    "zorder_key",
-    "collect_sorted",
-    "range_frame_window",
-    "priority_shipmode",
-    "product_profit",
-    # arbitrary-stateful streaming twins (applyInPandasWithState)
-    "streaming_session",
-    "streaming_user_stats",
-    # round-4: real PNG decode through the multimodal stage
-    "multimodal_decode_real",
-    # round-4: distributed BPE tokenizer training + segmentation
-    "bpe_train",
-    "bpe_segment",
-    "winsorize",
-    # stream-stream time-range join (watermark-bounded state)
-    "streaming_join",
-    # training-pair / sequence-dataset construction
-    "negative_samples",
-    "action_sequences",
-    # corpus data card + hashed-linear quality model
-    "corpus_report",
-    "ngram_model_score",
-    # watermark-bounded streaming dedup (duplicate-injected stream)
-    "streaming_dedup",
-    # SemDeDup cluster-routed semantic dedup (round-4 session add)
-    "semantic_dedup",
-    # exact-substring dedup rewrite (span removal + reassembly)
-    "remove_duplicate_spans",
-    # sqrt-temperature source rebalancing + join-key skew report
-    "temperature_mix",
-    "skew_report",
-    # token-distribution entropy quality signal
-    "token_entropy",
-    # composed tokenize->pack (BPE train + segment + packing, one plan)
-    "tokenize_pack",
-    # sweep-line interval concurrency
-    "interval_concurrency",
-    # fingerprint-diff incremental recompute (writes scratch; measures
-    # the full v1-build + incremental-v2 maintenance cycle)
-    "incremental_recompute",
-    # real WAV audio decode through the Arrow-batched media stage
-    "audio_decode_real",
-    # robust MAD outliers (double exact-median pass)
-    "mad_outliers",
-    # OR-amplified multi-table LSH + behavioral transition matrix +
-    # per-source contamination governance report
-    "ann_lsh_multi",
-    "action_transitions",
-    "contamination_report",
-    # first/last-touch conversion attribution (single-window form)
-    "attribution",
-    # bounded-memory exact heavy hitters (two-pass Misra-Gries)
-    "heavy_hitters",
-    # FK-candidate containment profiling
-    "fk_containment",
-    # WITH RECURSIVE analog (iterative pointer-chase)
-    "flatten_hierarchy",
-    # governance/evaluation reports (dedup clusters, language ID)
-    "dedup_report",
-    "language_confusion",
-    # hybrid keyword+vector retrieval (BM25 x dense, RRF-fused)
-    "hybrid_search",
-    # composed streaming ingest (gate -> dedup -> sink)
-    "streaming_ingest",
-    # dedup-quality evaluation + table content digest
-    "lsh_recall",
-    "table_digest",
-    # distributed power iteration (top principal direction)
-    "power_iteration",
-    # leakage-safe group-keyed split
-    "group_split",
-    # incremental rollup maintenance (additive state fold)
-    "merge_aggregate",
-    # length-bucketed partitioned packing
-    "bucketed_packs",
-    # streaming sliding-window twin (two window states per event)
-    "streaming_sliding",
-    # contrastive positive pairs (adjacent same-doc chunks)
-    "contrastive_pairs",
-    # raw-SQL surface (shared query text, both engines)
-    "sql_interface",
-    # real image augmentation (decode -> crop -> pool)
-    "image_augment_real",
-    # duplicate-aware loss weighting (soft dedup)
-    "dup_weights",
-    # PMI collocations (phrase discovery)
-    "collocations",
-    # weekly seasonality load-shape profile
-    "seasonality",
-    # rank-sensitive ANN evaluation (MRR)
-    "ann_mrr",
-    # asymmetric containment (excerpt/quote detection)
-    "containment_pairs",
-    # per-source distinguishing keywords (tf-idf at source granularity)
-    "source_keywords",
-    # per-doc feature-store assembly (column-wise composition)
-    "doc_features",
-    # MATCH_RECOGNIZE-style sequence pattern + integer decayed sum
-    "sequence_match",
-    "decayed_sum",
-    # robust daily volume anomaly monitor
-    "daily_anomalies",
-    # canonicalization dedup gain (reformatted duplicates)
-    "normalized_dup_gain",
-    # equi-depth quantile binning (map-stage discretization)
-    "quantile_bins",
-    # quality-aware near-dup survivor selection
-    "dedup_keep_best",
-    # categorical association (lift vs independence)
-    "contingency",
-    # running distinct (COUNT DISTINCT OVER via two windows)
-    "running_distinct",
-    # round-5: lossless parallel JDBC extract (embedded Derby)
-    "jdbc_roundtrip",
-    # round-5: real baseline-JPEG decode (vendored stdlib codec)
-    "jpeg_decode_real",
-    # round-5: graded ranking eval, quality-filter threshold sweep,
-    # deterministic training-shard shuffle
-    "ann_ndcg",
-    "quality_roc",
-    "shuffle_shards",
-    # round-5: product-quantization encode (the IVF-PQ compression half)
-    "pq_encode",
-    # round-5: PQ asymmetric-distance top-k (the IVF-PQ query half)
-    "pq_search",
-    # round-5: Fellegi-Sunter record linkage (blocked integer scoring)
-    "record_linkage",
-    # round-5: epoch materialization (per-source upsampling, zero shuffle)
-    "materialize_epoch",
-    # round-5: perceptual image near-dup (real PNG decode -> dHash ->
-    # banded hamming join)
-    "image_dhash_pairs",
-    # round-5: composed epoch construction (gate -> upsample -> shard),
-    # one lazy plan, one shuffle
-    "epoch_pipeline",
-    # round-5: row-level CDC diff; skyline via value-domain-bounded window
-    "row_diff",
-    "pareto_front",
-    # round-5: market-basket association mining (cap-bounded pair Generate)
-    "frequent_pairs",
-    # round-5: end-to-end IVF-PQ (cell routing + ADC ranking, one metric)
-    "ivf_pq_search",
-    # round-5: end-to-end multimodal dedup (decode -> dHash -> pairs -> CC)
-    "image_dedup",
-    # round-5: versioned-table time travel + persisted-snapshot CDC
-    "versioned_roundtrip",
-    # round-5: CDC-driven incremental rollup (incremental == full, proven)
-    "cdc_rollup",
-    # round-5: RNG-free word-dropout augmentation (scan-speed map stage)
-    "augment_dropout",
-    # round-5: k-anonymity privacy audit (one grouped pass)
-    "k_anonymity",
-    # round-5: time-weighted average (one lead window + one groupBy)
-    "twap",
-    # round-5: OHLC candlestick bars (five partial aggs, one groupBy)
-    "ohlc",
-    # round-5: per-group Gini concentration audit
-    "gini",
-    # round-5: Benford first-digit forensic audit
-    "benford",
-    # round-6: write-side contracts (observed metrics ride the write
-    # job; clustered one-file-per-key layout; schema drift report)
-    "observed_write",
-    "clustered_write",
-    "schema_drift",
-    # round-6: triangle census (edge-iterator, id-ordered)
-    "triangle_count",
-    # round-6: l-diversity privacy audit (one grouped pass)
-    "l_diversity",
-    # round-6: one-pass exact-decimal Pearson correlation matrix
-    "corr_matrix",
-    # round-6: CUSUM change-point over daily volumes
-    "cusum_shift",
-    # round-6: DataSketches HLL distinct profile (error-bound contract)
-    "hll_distinct",
-    # round-6: codegen parse_url component extraction
-    "url_extract",
-    # round-6: real progressive-JPEG (SOF2) decode through the
-    # Arrow-batched media stage (4-scan successive approximation)
-    "jpeg_progressive_real",
-    # round-6: real animated-GIF frame sampling (LZW decode)
-    "gif_frames_real",
-    # round-6: real compressed-audio (FLAC) decode through the
-    # Arrow-batched audio stage (Rice-coded prediction residuals)
-    "flac_decode_real",
-    # round-6: A/B readout + cross-split leakage governance audit
-    "ab_test",
-    "split_leakage",
-    # round-6: real MJPEG-AVI video frame sampling (RIFF walk + T.81)
-    "video_frames_real",
-    # round-6: write-audit-publish release gate over versioned tables
-    "wap_publish",
-    # round-6: real color (4:2:0 YCbCr) JPEG decode — the layout
-    # nearly every camera/web JPEG uses
-    "jpeg_color_real",
-    # round-6: truecolor PNG decode (exact-integer luminance mapping)
-    "png_color_real",
-    # round-6: B-cubed dedup-cluster quality evaluation
-    "cluster_eval",
-    # round-6: zstd-compressed parquet roundtrip (codec control)
-    "zstd_roundtrip",
-    # round-6: G.711 mu-law telephony decode (formula-exact oracle)
-    "g711_decode_real",
-    # round-6: BMP / Netpbm raster decode
-    "raster_decode_real",
-    # round-6: Hilbert-curve clustering key (locality-tighter z-order)
-    "hilbert_key",
-    # round-6: uncompressed TIFF decode, both byte orders (IFD walk)
-    "tiff_decode_real",
-    # round-6: IMA ADPCM lossy audio decode (recursive-CTE oracle)
-    "adpcm_decode_real",
-    # round-6: mergeable sketches (Count-Min frequency, KMV distinct)
-    "cms_frequency",
-    "kmv_distinct",
-    # round-6: base-32 geohash spatial keys (public-vector-pinned)
-    "geohash_tiles",
-    # round-6: autocorrelation function over the daily revenue series
-    "acf_daily",
-    # round-6: Standard MIDI File parse (symbolic-music modality)
-    "midi_decode_real",
-    # round-6: Theil-Sen robust trend (median of pairwise slopes)
-    "theil_sen",
-    # round-6: WebDataset tar shard export (USTAR-arithmetic oracle)
-    "webdataset_export",
-    # round-6: NFC Unicode normalization (Arrow-vectorized unicodedata)
-    "unicode_normalize",
-    # round-6: delete-d jackknife standard error (mergeable fold table)
-    "jackknife_se",
-    # round-6: Cohen's kappa chance-corrected labeler agreement
-    "cohens_kappa",
-    # round-6: hashing-trick vectorizer (no-vocabulary featurization)
-    "hashed_features",
-    # round-6: deterministic two-sample permutation test
-    "permutation_test",
-    # round-6: markdown -> text extraction (codegen regex chain)
-    "markdown_strip",
-    # round-6: percentile_approx rank-epsilon contract
-    "approx_quantile_contract",
-    # round-6: bounded-round k-core peel (unrolled-CTE oracle)
-    "k_core",
-    # round-6: chi-square independence over the full contingency grid
-    "chi2_independence",
-    # round-6: Luhn checksum-gated PII masking (pure codegen)
-    "luhn_mask",
-    # round-6: k-anonymity generalization (minimal-coarsening ladder)
-    "k_anonymize",
-    # round-6: Spearman rank correlation (distinct-value rank maps)
-    "spearman",
-    # round-6: Mann-Whitney U rank-sum test (closed-form null)
-    "mann_whitney",
-    # round-6: two-sample Kolmogorov-Smirnov over pooled CDFs
-    "ks_test",
-    # round-6: smoothed target encoding (categorical feature)
-    "target_encode",
-    # round-6: MP3 container metadata walk (frame headers + ID3)
-    "mp3_meta_real",
-    # round-6: 24-bpp BMP decode, both row orientations
-    "bmp_decode_real",
-    # round-6: EXIF APP1/TIFF IFD metadata extraction
-    "exif_extract_real",
-    # round-6: WARC export -> distributed re-parse (Common Crawl shape)
-    "warc_roundtrip",
-    # round-6: exact-integer OLS via normal equations
-    "ols_regression",
-    # round-6: Resource Allocation link prediction (co-purchase)
-    "link_prediction",
-    # round-6: Kendall tau-b over the contingency grid
-    "kendall_tau",
-    # round-6: Gini-impurity feature ranking
-    "gini_gain",
-    # round-6: calibration report (reliability bins + ECE)
-    "calibration",
-    # round-6: deterministic Poisson bootstrap CI (100 resamples)
-    "bootstrap_ci",
-    # round-6: Flesch readability (regexp folds at scan speed)
-    "readability",
-    # round-6: SRT subtitle parse (video-text alignment)
-    "srt_parse_real",
-    # round-6: integer-DCT perceptual hash + invariance audit
-    "image_phash",
-    # round-6: multinomial Naive Bayes train + classify
-    "naive_bayes",
-    # round-6: grid-DBSCAN density clustering over embeddings
-    "density_clusters",
-    # round-6: Holt double exponential smoothing (bounded fold)
-    "holt_forecast",
-    # round-6: XLSX workbook write -> distributed re-parse
-    "xlsx_roundtrip",
-    # round-6: eTLD+1 registrable-domain rollup (PSL longest-match)
-    "domain_rollup",
-    # round-6: Avro object-container cycle (stdlib codec)
-    "avro_roundtrip",
-    # round-6: fixed-width positional text cycle (pure codegen)
-    "fixed_width_roundtrip",
-    # round-6: parquet footer-stats audit (metadata-only scan)
-    "parquet_stats",
-    # round-6: convex-polygon containment (integer half-planes)
-    "point_in_polygon",
-    # round-6: gaps-and-islands interval merge
-    "merge_intervals",
-    # round-6: reader-side schema evolution (add/drop/widen mergeSchema)
-    "schema_evolution",
-    # round-6: Mahalanobis 2-D outlier screen (one moment pass)
-    "mahalanobis",
-    # round-6: survivorship golden-record merge (linkage consumer)
-    "golden_record",
-    # round-6: magic-byte media-type sniffer (pure codegen over binary)
-    "media_sniff",
-    # round-8: real MP4/ISO-BMFF frame sampling (box walk + sample-table
-    # offset arithmetic + T.81 decode)
-    "mp4_frames_real",
-    # round-8: URL canonicalization dedup (pure-codegen crawl-key
-    # normalization + one hash-partial groupBy)
-    "url_dedup",
-    # round-8: ISO-BMFF audio track metadata (esds descriptor walk)
-    "m4a_meta_real",
-    # round-8: WebVTT subtitle parse (NOTE blocks, cue ids, settings)
-    "vtt_parse_real",
-    # round-8: Matroska/EBML frame sampling (varint tree + T.81)
-    "mkv_frames_real",
-    # round-8: Ogg Opus metadata with per-page CRC verification
-    "ogg_meta_real",
-    # round-8: RFC 9309 robots.txt governance (broadcast codegen fold)
-    "robots_audit",
-    # round-8: WebDataset write->read-back loop (binaryFile + tarfile)
-    "webdataset_roundtrip",
-    # round-8: ID3v2.4 frame parse, all three text encodings byte-pinned
-    "id3_tags_real",
-    # round-8: charset triage (BOM scan -> UTF-8 validation -> fallback)
-    "charset_sniff",
-    # round-8: DOCX write->read cycle (OOXML zip + WordprocessingML)
-    "docx_extract",
-    # round-8: warc.gz cycle (per-record gzip members, exact framing)
-    "warc_gz_roundtrip",
-    # round-8: purged temporal split (leakage-controlled embargo gap)
-    "embargo_split",
-    # round-8: prefix-preserving keyed IP pseudonymization (codegen)
-    "ip_anonymize",
-    # round-8: pre-join skew diagnostic (exact cardinality, no join run)
-    "join_skew",
-    # round-8: Matryoshka truncation retrieval eval (32/16-dim recall)
-    "matryoshka_eval",
-    # round-8: forecasting lag/rolling features (RANGE windows, one sort)
-    "lag_features",
-    # round-8: WARC with the HTTP layer opened (RFC 9112 framing)
-    "warc_http_roundtrip",
-    # round-8: SQLite database-file cycle (stdlib reference driver)
-    "sqlite_roundtrip",
-    # round-8: PDF structural chain (xref -> page tree -> Flate ->
-    # text operators)
-    "pdf_extract",
-    # round-8: Arrow IPC (Feather V2) interchange cycle
-    "arrow_ipc_roundtrip",
-    # round-8: mbox mailing-list cycle (RFC 4155 framing + mboxrd)
-    "mbox_extract",
-    # round-8: Kaplan-Meier retention with censoring (ordered e6 fold)
-    "kaplan_meier",
-    # round-8: WebP container metadata (VP8/VP8L/VP8X bit-packed dims)
-    "webp_meta_real",
-    # round-8: Heaps-law vocabulary growth (first-occurrence bucketing)
-    "heaps_law",
-    # round-8: compressed JSONL drop (gzip/xz/bzip2 magic dispatch)
-    "xz_jsonl_roundtrip",
-    # round-8 capstone: sniff -> route-on-detected-type -> per-type
-    # real decode -> rollup, all four media branches in one plan
-    "media_pipeline",
-    # round-9: shingle first-occurrence novelty (two-shuffle min-id)
-    "ngram_novelty",
-    # round-9: DSIR hashed-bigram importance (bounded broadcast weights)
-    "dsir_importance",
-    # round-9: integer-EMD t-closeness audit
-    "t_closeness",
-    # round-9: windowed RMS/ZCR frames from real WAV decode
-    "audio_frames_real",
-    # round-9: PNG histogram facts + Renyi-2 collision entropy proxy
-    "image_histogram_real",
-    # round-9: deterministic STORED zip shards, central-directory scan
-    "zip_roundtrip",
-    # round-9: seasonal-naive MASE gate on the daily revenue series
-    "mase_eval",
-    # round-9: Bloom runtime-filter pruning with FP audit
-    "bloom_semi_join",
-    # round-9: GroupKFold leakage-safe fold assignment
-    "group_kfold",
-    # round-9: watermark-delay evidence (power-of-two lateness buckets)
-    "lateness_profile",
-    # round-9 wave 2: source-pair governance, sketch overlap, indexed
-    # phrase search, LaTeX extraction, margin mining
-    "cross_source_dups",
-    "kmv_overlap",
-    "ngram_search",
-    "latex_strip",
-    "bitext_mine",
-    # round-9 wave 3: robust decomposition, coreset selection,
-    # tokenizer fertility, blocking quality
-    "stl_decompose",
-    "kcenter_coreset",
-    "bpe_fertility",
-    "blocking_eval",
-    # round-9 wave 4: streaming enrichment + CDC upsert, image patch
-    # tokens, integer audio decimation
-    "streaming_enrich",
-    "streaming_upsert",
-    "image_patches_real",
-    "audio_resample_real",
-    # round-9 wave 5: classic behavioral segmentation
-    "rfm_segments",
-    # round-10: distributed exact rank, FIM restructuring, outer stream
-    # join, winnowing, PAV calibration, HRW sharding, AIFF/pcap/TFRecord
-    # containers, ULID assignment, shuffle audit
-    "global_rank",
-    "fim_transform",
-    "streaming_outer_join",
-    "winnow_fingerprints",
-    "isotonic_calibration",
-    "rendezvous_shards",
-    "aiff_meta_real",
-    "pcap_extract",
-    "tfrecord_roundtrip",
-    "ulid_generate",
-    "shuffle_quality",
-    "randomized_response",
-    "cdc_chunks",
-    "facility_location",
-    "quantile_normalize",
-    "maxsim_retrieval",
-    # round-11 additions: distributed 2-D skyline, deterministic LPA
-    "skyline",
-    "label_propagation",
-    "sorted_neighborhood",
-    "bfs_hops",
-    "gaps_islands",
-    "woe_encoding",
-    "lof_outliers",
-    "mutual_info",
-    "weighted_topk_sample",
-    "fs_weights",
-    "pca_project",
-    "grouped_mode",
-    "rake_keywords",
-    "sequence_gaps",
-    "allen_relations",
-    "skipgram_pairs",
-    "fd_check",
-    "streaming_topk",
-    "good_turing",
-    "ips_eval",
-    "zipf_fit",
-    "nelson_aalen",
-    "term_burstiness",
-    "transition_entropy",
-    "centroid_novelty",
-    "cuped_eval",
-    # -- round-12 additions -------------------------------------------
-    "hits_scores",
-    "graph_assortativity",
-    "herfindahl_index",
-    "ewma_smooth",
-    "clustering_coeff",
-    "adamic_adar",
-    "prop_ztest",
-    "streaming_ewma",
-    "oov_rate",
-    "anova_f",
-    "cross_correlation",
-    "sax_symbols",
-]
-
-#: Explicit bench-exclusion manifest (VERDICT r11 item 3): every
-#: ``queries()`` name is either in HEADLINE or documented here with a
-#: reason — pinned by tests/test_contract.py::
-#: test_bench_manifest_is_complete so the bench map can never drift
-#: from the declared surface the way COVERAGE.md once did.  Reasons
-#: are judgments about MEASUREMENT value, not correctness (every name
-#: here still has a driver-checked oracle): a headline total dominated
-#: by sub-second plan-family duplicates would hide regressions in the
-#: scale-bearing queries.
+#: Queries the bench leaves out, each with its reason.  Every other
+#: ``queries()`` name is benched (HEADLINE below), so a new query is
+#: benched unless it is listed here; tests/test_contract.py::
+#: test_bench_manifest_is_complete pins that every name here is a
+#: declared query.  Reasons are judgments about MEASUREMENT value, not
+#: correctness (every name here still has a driver-checked oracle): a
+#: headline total dominated by sub-second plan-family duplicates would
+#: hide regressions in the scale-bearing queries.
 BENCH_EXCLUDED = {
     # write-path / roundtrip micro-checks: wall time measures tiny-file
     # sink setup + scratch IO, not engine throughput; their scan paths
@@ -669,6 +97,10 @@ BENCH_EXCLUDED = {
     "frame_sample": "stub-codec plumbing; real-codec twins benched (image_patches_real)",
     "pagerank": "iterative frontier family benched via bfs_hops/label_propagation; 10x isolated spot on record",
 }
+
+#: Benched queries: every declared query not excluded above, in
+#: ``queries()`` (source) order.
+HEADLINE = [n for n in entrymod.queries() if n not in BENCH_EXCLUDED]
 
 
 def main() -> None:

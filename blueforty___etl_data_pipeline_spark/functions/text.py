@@ -360,24 +360,6 @@ def ipv4_to_long(ip: Column) -> Column:
     return F.when(cond, val)
 
 
-def in_cidr(ip_long: Column, cidr: str) -> Column:
-    """Membership of a numeric IP in a CIDR block ``a.b.c.d/p`` —
-    integer prefix compare (``ip div 2^(32−p) == net div 2^(32−p)``),
-    exact and codegen-folded.  Broadcast a small CIDR list as a chain
-    of these; a full routing-table-scale match would sort prefixes
-    into a longest-prefix lookup table instead."""
-    net_s, _, plen_s = cidr.partition("/")
-    plen = int(plen_s)
-    if not 0 <= plen <= 32:
-        raise ValueError(f"bad prefix length in {cidr!r}")
-    a, b, c, d = (int(x) for x in net_s.split("."))
-    net = a * 16777216 + b * 65536 + c * 256 + d
-    shift = 1 << (32 - plen)
-    return (
-        F.floor(ip_long / F.lit(shift)) == net // shift
-    )
-
-
 #: Query parameters that carry tracking/session state, not content
 #: identity — the standard strip set for URL-keyed dedup (utm_* is
 #: matched as a prefix; these are exact names).

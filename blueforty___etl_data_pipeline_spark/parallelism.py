@@ -29,18 +29,38 @@ retry: Spark sorts input rows before round-robin assignment
 from __future__ import annotations
 
 import os
+import re
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 
 __all__ = ["spread_scan"]
 
+_BYTE_UNITS = {"": 1, "b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
 
-def _local_size(uri: str) -> int:
-    path = uri[7:] if uri.startswith("file://") else uri
+
+def _local_size(uri: str) -> int | None:
+    """Size of a local file given as a path or ``file:`` URI; ``None``
+    when it cannot be read (remote schemes such as ``s3://``, missing
+    files)."""
+    parsed = urlparse(uri)
+    if parsed.scheme == "file":
+        path = unquote(parsed.path)
+    elif parsed.scheme == "":
+        path = uri
+    else:
+        return None
     try:
         return os.path.getsize(path)
     except OSError:
-        return 0
+        return None
+
+
+def _parse_bytes(raw: str) -> int | None:
+    """A Spark byte-size conf value (``134217728b``, ``64m``, ``1g``,
+    ``512kb``, bare digits = bytes) in bytes; ``None`` if unparseable."""
+    m = re.fullmatch(r"\s*(\d+)\s*([bkmg]?)b?\s*", raw.lower())
+    return int(m.group(1)) * _BYTE_UNITS[m.group(2)] if m else None
 
 
 def spread_scan(df: DataFrame, min_rows_per_task: int | None = None) -> DataFrame:
@@ -54,7 +74,9 @@ def spread_scan(df: DataFrame, min_rows_per_task: int | None = None) -> DataFram
     sidecar tables are single-row-group), plus the split count for
     large files.  The estimate errs high for many-small-file tables
     (packing), which makes the helper conservatively skip — correct,
-    since such scans are already parallel.
+    since such scans are already parallel.  When any input file's size
+    cannot be read (remote object stores) or the conf cannot be parsed,
+    the frame is returned unchanged.
     """
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
@@ -66,14 +88,13 @@ def spread_scan(df: DataFrame, min_rows_per_task: int | None = None) -> DataFram
         return df
     if not files:
         return df
-    total = sum(_local_size(f) for f in files)
-    try:
-        raw = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        digits = "".join(ch for ch in raw if ch.isdigit())
-        max_pb = int(digits) if digits else 128 << 20
-    except Exception:
-        max_pb = 128 << 20
-    est_tasks = max(len(files), total // max_pb)
+    sizes = [_local_size(f) for f in files]
+    if None in sizes:
+        return df
+    max_pb = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    if not max_pb:
+        return df
+    est_tasks = max(len(files), sum(sizes) // max_pb)
     if est_tasks >= par:
         return df
     return df.repartition(par)

@@ -22,6 +22,12 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+#: The directory that holds this package (and ``__spark_entry__.py``).
+#: Python workers start in the JVM's working directory, so without it
+#: on their path they cannot unpickle functions from this package when
+#: the driver runs from anywhere else.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "blueforty-spark",
@@ -34,6 +40,9 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falling back to
     ``local[*]``) so tests and bench share one entry point; on a real
     cluster the caller simply passes no master and submits normally.
+    Python workers get the package's parent directory at the front of
+    their ``PYTHONPATH`` (the caller's ``PYTHONPATH`` follows), so the
+    session works from any working directory; ``extra_conf`` wins.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -54,6 +63,9 @@ def get_spark(
     # override via the same env; if the JVM is already up, the conf is
     # inert.
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", "4g")
+    worker_path = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, os.environ.get("PYTHONPATH")) if p
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -83,6 +95,7 @@ def get_spark(
         # Spark 4 hard-fails the scan (PARQUET_TYPE_ILLEGAL).  The nanos
         # bigint is converted to a real timestamp in sources/catalog.py.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

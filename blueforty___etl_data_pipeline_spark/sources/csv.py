@@ -121,25 +121,6 @@ def read_tsv(
     return read_csv(spark, path, schema=schema, options=TSV_OPTIONS, **kwargs)
 
 
-def positional_select(df: DataFrame, mapping: list[tuple[int, Column]]) -> DataFrame:
-    """COPY-style positional projection: the reference selects staged CSV
-    fields as ``$1..$21`` and reorders/converts them into named columns
-    (BlueForty.py:88-111).  ``mapping`` is ``[(1-based-position,
-    expression-built-from-that-column), ...]`` — see
-    plans/pipelines.py for the purchases loader that uses it."""
-    cols = df.columns
-    out = []
-    for pos, expr in mapping:
-        _ = cols[pos - 1]  # validate position exists
-        out.append(expr)
-    return df.select(*out)
-
-
-def pos(df: DataFrame, position: int) -> Column:
-    """``$n`` → the n-th (1-based) physical column of ``df``."""
-    return F.col(df.columns[position - 1])
-
-
 def with_file_metadata(df: DataFrame) -> DataFrame:
     """METADATA$FILENAME / METADATA$FILE_LAST_MODIFIED per row
     (BlueForty.py:106-107) via Spark's hidden ``_metadata`` struct."""

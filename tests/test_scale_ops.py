@@ -3,6 +3,7 @@ embedding near-dup blocking."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from blueforty___etl_data_pipeline_spark.operators.similarity import (
@@ -426,10 +427,12 @@ def test_spread_scan_adaptive_repartition(spark, tmp_path):
 
     from blueforty___etl_data_pipeline_spark.parallelism import spread_scan
 
+    par = spark.sparkContext.defaultParallelism
+    if par <= 1:
+        pytest.skip("spread_scan is an identity at defaultParallelism <= 1")
     src = str(tmp_path / "one_group")
     spark.range(10_000).coalesce(1).write.parquet(src)
     df = spark.read.parquet(src)
-    par = spark.sparkContext.defaultParallelism
 
     out = spread_scan(df)
     # plan carries the round-robin exchange...
@@ -447,3 +450,50 @@ def test_spread_scan_adaptive_repartition(spark, tmp_path):
     spark.range(10_000).repartition(par).write.parquet(many)
     df_many = spark.read.parquet(many)
     assert spread_scan(df_many) is df_many
+
+
+def test_spread_scan_leaves_unsized_inputs_alone(spark, tmp_path, monkeypatch):
+    # A file whose size cannot be read (an object-store URI) must not be
+    # sized as 0 bytes and trigger a repartition: the helper cannot
+    # measure its input, so the plan stays as it is.
+    from blueforty___etl_data_pipeline_spark.parallelism import spread_scan
+
+    src = str(tmp_path / "one_group")
+    spark.range(100).coalesce(1).write.parquet(src)
+    df = spark.read.parquet(src)
+    local = df.inputFiles()
+    monkeypatch.setattr(df, "inputFiles", lambda: ["s3://bucket/t/part-0.parquet"])
+    assert spread_scan(df) is df
+    monkeypatch.setattr(df, "inputFiles", lambda: local + ["s3a://bucket/t/k"])
+    assert spread_scan(df) is df
+
+
+def test_spread_scan_parses_byte_size_suffixes():
+    from blueforty___etl_data_pipeline_spark.parallelism import _parse_bytes
+
+    assert _parse_bytes("134217728b") == 128 << 20  # Spark's default
+    assert _parse_bytes("134217728") == 128 << 20
+    assert _parse_bytes("64m") == 64 << 20
+    assert _parse_bytes("64MB") == 64 << 20
+    assert _parse_bytes("512k") == 512 << 10
+    assert _parse_bytes("2g") == 2 << 30
+    assert _parse_bytes("lots") is None
+
+
+def test_spread_scan_honours_suffixed_max_partition_bytes(spark, tmp_path):
+    # "1g" is a gigabyte, not 1 byte: a small single file then estimates
+    # as one task, below the session's parallelism, so the helper spreads.
+    from blueforty___etl_data_pipeline_spark.parallelism import spread_scan
+
+    if spark.sparkContext.defaultParallelism <= 1:
+        pytest.skip("spread_scan is an identity at defaultParallelism <= 1")
+    src = str(tmp_path / "one_file")
+    spark.range(10_000).coalesce(1).write.parquet(src)
+    df = spark.read.parquet(src)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1g")
+    try:
+        assert spread_scan(df) is not df
+    finally:
+        spark.conf.set(key, old)
