@@ -2188,12 +2188,14 @@ def _stream_partitions_for(src: str, current: int, cores: int) -> int:
     staged input size — one partition per ~32 MB of data files, floored
     at ``min(8, cores)``, capped at the session's configured
     ``spark.sql.shuffle.partitions`` so a cluster submitter's sizing
-    still wins at scale.  The floor keeps one wave of tasks: at 32
-    cores a floor of 4 starved the Python-stateful drains
-    [applyInPandasWithState], whose cost is per-row work, while on 4
-    cores 8 state partitions ran as two waves of Python tasks
-    (streaming_user_stats at sf0.1: 2.12-2.39 s at 8, 1.88-1.93 s at
-    4).  ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`` overrides for
+    still wins at scale.  The floor keeps one wave of state tasks:
+    each state partition is one task per batch that loads and commits
+    its own store, so partitions beyond the cores run as extra waves of
+    that fixed cost (streaming_user_stats at sf0.1 on 4 cores:
+    1.16-1.31 s at 4 partitions, 1.41-1.71 s at 8).  Above 8 cores the floor
+    stays 8; the 32-core run that set that cap predates the bucketed
+    user-stats state and has not been repeated.
+    ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`` overrides for
     deployments whose state size is not input-proportional; a value
     that is not an integer is ignored.  Partitioning only changes WHERE
     a key's state lives, never per-key results, so emissions are
@@ -2399,9 +2401,11 @@ def q_streaming_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifetime per-user (count, Σ floor(value·10⁶)) via
     ``applyInPandasWithState`` (streaming/stateful.
     running_user_stats_exact), drained availableNow in update mode.
-    Update-mode sinks receive one row per (user, trigger); both state
-    fields are monotone integers, so MAX per user is the final state
-    and must equal the plain GROUP BY — the first driver-verified
+    State is grouped by 32 user-id hash buckets, one numpy fold per
+    bucket per trigger, not one Python call per user.  Update-mode
+    sinks still receive one row per (user, trigger); both state fields
+    are monotone integers, so MAX per user is the final state and must
+    equal the plain GROUP BY — the first driver-verified
     arbitrary-stateful row (windows/sessions exercise built-in state;
     this exercises user-defined state)."""
     _prep(spark)

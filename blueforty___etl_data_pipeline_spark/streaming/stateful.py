@@ -172,35 +172,70 @@ def streaming_upsert_sink(
     return writer.start()
 
 
-#: Output/state schemas of running_user_stats_exact (integer micros —
+#: Output schema of running_user_stats_exact (integer micros —
 #: order-independent sums, so the result is oracle-exact).
 _USER_STATS_EXACT_SCHEMA = "user_id long, n_events long, value_micros long"
-_USER_STATE_EXACT_SCHEMA = "n long, micros long"
+#: Key buckets of running_user_stats_exact.  The checkpointed state is
+#: keyed by bucket, so this is a constant: changing it (or letting a
+#: session conf change it) would orphan every existing checkpoint.
+_USER_STATS_BUCKETS = 32
+#: State of one bucket: its users as parallel arrays (a null user_id is
+#: a null entry).
+_USER_BUCKET_STATE_SCHEMA = (
+    "users array<long>, n array<long>, micros array<long>"
+)
 
 
-def _update_user_stats_exact(
+def _fold_user_bucket(
     key: tuple, batches: Iterator, state: GroupState
 ) -> Iterator:
-    """Per-key update in INTEGER micros: int64 additions commute, so the
-    running totals are identical no matter how rows split across
-    micro-batches or partitions — unlike the float variant, whose sum
-    depends on accumulation order.  No timeout: state is never flushed
-    mid-run, so every emitted row is a true prefix total and the final
-    (max) row per key equals the batch aggregate."""
+    """Fold one key bucket's micro-batch rows into its users' running
+    (count, Σ micros) and emit one row per user seen in this trigger.
+
+    Input rows are ``(_null, _uid, _vm)``: a null-user_id flag, the
+    user id with nulls replaced by 0, and the value in integer micros.
+    The bucket's stored users enter the fold as pre-aggregated rows:
+    one ``pd.factorize`` (a hash ``unique``) and two ``np.add.at``
+    merge state and batch.  The ids are a nullable array, so a null
+    user_id is its own user, as under ``groupBy``; int64 alone cannot
+    hold it.  int64 additions commute, so the running totals are
+    identical no matter how rows split across micro-batches or
+    partitions."""
+    import numpy as np
     import pandas as pd
 
-    n, micros = state.get if state.exists else (0, 0)
-    for pdf in batches:
-        n += len(pdf)
-        micros += int(pdf["_vm"].sum())
-    state.update((n, micros))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_events": [n],
-            "value_micros": [micros],
-        }
+    pdf = pd.concat(list(batches), ignore_index=True)
+    users, n, micros = state.get if state.exists else ([], [], [])
+    ids = pd.arrays.IntegerArray(
+        np.concatenate([
+            np.array([u or 0 for u in users], dtype=np.int64),
+            pdf["_uid"].to_numpy(np.int64),
+        ]),
+        np.concatenate([
+            np.array([u is None for u in users], dtype=bool),
+            pdf["_null"].to_numpy(bool),
+        ]),
     )
+    inv, keys = pd.factorize(ids, use_na_sentinel=False)
+    tot_n = np.zeros(len(keys), dtype=np.int64)
+    tot_m = np.zeros(len(keys), dtype=np.int64)
+    np.add.at(tot_n, inv, np.concatenate(
+        [np.asarray(n, dtype=np.int64), np.ones(len(pdf), dtype=np.int64)]
+    ))
+    np.add.at(tot_m, inv, np.concatenate(
+        [np.asarray(micros, dtype=np.int64), pdf["_vm"].to_numpy(np.int64)]
+    ))
+    state.update((
+        keys.to_numpy(object, na_value=None).tolist(),
+        tot_n.tolist(),
+        tot_m.tolist(),
+    ))
+    touched = np.unique(inv[len(users):])
+    yield pd.DataFrame({
+        "user_id": keys[touched],
+        "n_events": tot_n[touched],
+        "value_micros": tot_m[touched],
+    })
 
 
 def running_user_stats_exact(events: DataFrame) -> DataFrame:
@@ -209,19 +244,33 @@ def running_user_stats_exact(events: DataFrame) -> DataFrame:
     :func:`running_user_stats`: because state is integer, the LAST
     update per user (select max, both fields are monotone) equals the
     batch GROUP BY exactly, which is what lets a driver check a custom
-    stateful operator against plain SQL.
+    stateful operator against plain SQL.  No timeout: state is never
+    flushed mid-run, so every emitted row is a true prefix total.  A
+    null value counts as a row and adds 0 micros.
 
-    Scale: state is one (int, int) per user; each trigger touches only
-    the keys present in the micro-batch.
+    Output is update mode, one row per (user, trigger), but the state
+    is grouped by key bucket, ``pmod(xxhash64(user_id),
+    _USER_STATS_BUCKETS)``, not by user: each bucket stores its users
+    as parallel arrays and :func:`_fold_user_bucket` folds a whole
+    bucket's rows with numpy.  The trade-off: a trigger makes at most
+    ``_USER_STATS_BUCKETS`` (32) Python calls instead of one per
+    touched user, and each touched bucket rewrites its whole state
+    row, about users ÷ 32 entries, even if only one of its users
+    changed.  That pays when a trigger touches most users (a drain, a
+    backfill); a stream whose triggers touch few users among very many
+    rewrites more state than it folds.
     """
-    prepared = events.select(
-        "user_id",
-        F.floor(F.col("value") * 1000000).cast("long").alias("_vm"),
+    # One SQL projection: a single py4j call instead of a Column tree.
+    prepared = events.selectExpr(
+        "user_id IS NULL AS _null",
+        "CAST(coalesce(user_id, 0) AS BIGINT) AS _uid",
+        "coalesce(CAST(floor(value * 1000000) AS BIGINT), 0) AS _vm",
+        f"pmod(xxhash64(user_id), {_USER_STATS_BUCKETS}) AS _bucket",
     )
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        _update_user_stats_exact,
+    return prepared.groupBy("_bucket").applyInPandasWithState(
+        _fold_user_bucket,
         outputStructType=_USER_STATS_EXACT_SCHEMA,
-        stateStructType=_USER_STATE_EXACT_SCHEMA,
+        stateStructType=_USER_BUCKET_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -56,6 +56,31 @@ def test_no_row_udfs_or_cartesians_anywhere(spark):
     )
 
 
+#: Cheap default-tier subset of the sweep above: one query per engine
+#: shape the sweep guards (a Python stateful drain, a lineage-cut graph
+#: loop, a broadcast cross join, an ANN scan, an Arrow ``mapInPandas``
+#: stage, a window query), each mapped to an operator its plan must
+#: show so the subset stays representative.
+_SMOKE = {
+    "streaming_user_stats": None,
+    "flatten_hierarchy": None,
+    "closest_stations": "BroadcastNestedLoopJoin",
+    "ann_ivf": None,
+    "multimodal_features": "MapInPandas",
+    "lag_features": "Window",
+}
+
+
+def test_no_row_udfs_or_cartesians_smoke(spark):
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    for name, expected in _SMOKE.items():
+        plan = _fmt(qs[name](spark, SF_DIR))
+        assert not [tok for tok in FORBIDDEN if tok in plan], name
+        assert expected is None or expected in plan, (name, expected)
+
+
 def _tree_nodes(plan: str):
     """Parse the formatted-explain tree into (node_id_or_None, name,
     depth) triples, in tree order."""
