@@ -51,6 +51,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from blueforty___etl_data_pipeline_spark.lineage import cut_lineage
 from blueforty___etl_data_pipeline_spark.parallelism import spread_scan
 
 from blueforty___etl_data_pipeline_spark.functions.cleaning import (
@@ -2194,18 +2195,10 @@ def _stream_partitions_for(src: str, current: int, cores: int) -> int:
     that fixed cost (streaming_user_stats at sf0.1 on 4 cores:
     1.16-1.31 s at 4 partitions, 1.41-1.71 s at 8).  Above 8 cores the floor
     stays 8; the 32-core run that set that cap predates the bucketed
-    user-stats state and has not been repeated.
-    ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`` overrides for
-    deployments whose state size is not input-proportional; a value
-    that is not an integer is ignored.  Partitioning only changes WHERE
-    a key's state lives, never per-key results, so emissions are
-    identical.
+    user-stats state and has not been repeated.  Partitioning only
+    changes WHERE a key's state lives, never per-key results, so
+    emissions are identical.
     """
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "")
-    try:
-        return max(1, int(env))
-    except ValueError:
-        pass
     if not os.path.isdir(src):
         return current
     # Data files as Spark's file index lists them: names starting with
@@ -4343,8 +4336,6 @@ def q_ann_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer micro fixed-point: per query contribute 1e6 div rank (0 if
     absent), MRR = sum div n_queries."""
     _prep(spark)
-    from blueforty___etl_data_pipeline_spark.lineage import cut_lineage
-
     # Spread the single-row-group corpus scan (guide §2.5, round-15).
     emb = spread_scan(_t(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") % 100 == 0)
@@ -4466,8 +4457,6 @@ def q_ann_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.desc("score"), F.asc("neighbor_id")
     )
     exact = ann_brute_force(emb, queries, k=4, round_decimals=6)
-    from blueforty___etl_data_pipeline_spark.lineage import cut_lineage
-
     # Graded truth feeds two ndcg joins and four qids derivations; a
     # lazy lineage cut materializes the O(|queries|·|corpus|) scoring
     # pass ONCE instead of six times (round-14, guide §5).
@@ -4785,12 +4774,12 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread_scan(_t(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     # The exact result feeds BOTH recall joins and the totals agg — a
-    # lazy localCheckpoint materializes the brute-force scan once
-    # (ContextCleaner-released; a persist here would leak across calls)
+    # lazy cut materializes the brute-force scan once (a persist here
+    # would leak across calls)
     exact = (
         ann_brute_force(emb, queries, k=5, round_decimals=6)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=False)
+        .transform(cut_lineage, eager=False)
     )
     lsh = ann_lsh_bucketed(
         emb, queries, k=5, n_planes=8, dim=64, round_decimals=6
@@ -6276,8 +6265,6 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup run.  The exact ground truth runs with the default-on
     hot-shingle cap (``_SHINGLE_CAP``), matching the capped oracle."""
     _prep(spark)
-    from blueforty___etl_data_pipeline_spark.lineage import cut_lineage
-
     # Spread the single-row-group scan: the MinHash Arrow pass and
     # the shingle explode otherwise run on one task (guide §2.5, r15).
     docs = spread_scan(_t(spark, sf_dir, "documents"))
@@ -9404,10 +9391,10 @@ def q_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": ids, "content": blobs})
 
     media = docs.mapInPandas(to_png, schema="doc_id long, content binary")
-    # Lazy localCheckpoint (ContextCleaner-released), not persist: the
-    # dHash table is read by both the pair join and the survivor join,
-    # and a persist here would leak cached blocks across calls.
-    hashes = image_dhash(media).localCheckpoint(eager=False)
+    # Lazy cut, not persist: the dHash table is read by both the pair
+    # join and the survivor join, and a persist here would leak cached
+    # blocks across calls.
+    hashes = cut_lineage(image_dhash(media), eager=False)
     pairs = dhash_pairs(hashes, bits=60, bands=4, max_hamming=3)
     return dedup_near_duplicates(
         hashes.select("doc_id", "dhash"), pairs,
@@ -13072,7 +13059,7 @@ def q_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     full = (
         ann_brute_force(emb, queries, k=5, round_decimals=6)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=False)
+        .transform(cut_lineage, eager=False)
     )
     tot = full.agg(F.count(F.lit(1)).alias("n_exact"))
 

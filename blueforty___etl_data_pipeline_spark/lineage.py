@@ -8,7 +8,9 @@ whole nested tree every round (round-12 post-mortem: six phases of
 joins + broadcast cross-joins OOMed analysis on a 1 GiB driver), and a
 failure re-executes from the original source.
 
-``cut_lineage`` is the one place that decides HOW the cut happens:
+``cut_lineage`` is the one place that decides HOW the cut happens;
+no other module calls ``checkpoint`` or ``localCheckpoint``
+(``tests/test_lineage_policy.py`` pins that):
 
 - **Reliable ``checkpoint`` when a checkpoint dir is configured.**
   ``DataFrame.checkpoint`` writes the materialized partitions to the
@@ -25,6 +27,19 @@ failure re-executes from the original source.
 Both forms truncate the plan identically; results are byte-identical
 (asserted by ``tests/test_lineage.py`` in a fresh subprocess session
 with a checkpoint dir set).
+
+``eager=True`` (the default) runs one job at call time and returns a
+frame that reads the materialized rows.  ``eager=False`` is the lazy
+contract: nothing runs at call time, the first action over the
+returned frame materializes it as part of that action's job, and
+every later action reads the materialized rows.  Use it for a frame
+with several consumers inside one plan, or whose only reader is the
+next action anyway.  On the reliable path the lazy form writes its
+files after that first action, in a job of its own that recomputes
+the frame.  Local blocks are
+released when the cut frame is garbage collected; reliable-path files
+are not removed unless
+``spark.cleaner.referenceTracking.cleanCheckpoints`` is set.
 
 ``cut_observed`` is the one place where a loop's convergence probe
 rides on a cut: it attaches ``DataFrame.observe`` aggregates to the
@@ -52,9 +67,8 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     Uses reliable ``checkpoint`` when ``sparkContext`` has a checkpoint
     directory configured (the multi-executor deployment path), else
     ``localCheckpoint`` (single-JVM local mode).  ``eager=False``
-    defers materialization to first use — for frames that feed exactly
-    one downstream action, the lazy form avoids a separate
-    materialization job.
+    defers materialization to the first action over the result (see
+    the module docstring).
     """
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:

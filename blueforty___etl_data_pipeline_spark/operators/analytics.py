@@ -15,6 +15,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..lineage import cut_lineage
+
 
 def _w(partition_by: Sequence[str], order_by: Sequence[Column | str]):
     return Window.partitionBy(*partition_by).orderBy(*order_by)
@@ -1431,7 +1433,7 @@ def density_ratio_outliers(
     1 + |N(o)| ≥ 2.  This keeps every point with a nonzero sampled
     neighbor count in the output with its count intact (a plain inner
     join here would silently drop such points — round-12 fix).
-    Candidate pairs are localCheckpoint-ed once and reused for both
+    Candidate pairs are cut (``cut_lineage``) once and reused for both
     aggregations (neighbor counts, then neighbor-density sums), so
     the quadratic term is never materialized twice.
     """
@@ -1480,7 +1482,7 @@ def density_ratio_outliers(
         shifted.join(nbr, on=["ncx", "ncy"])
         .filter((F.col("ia") != F.col("ib")) & (d2 <= eps_q * eps_q))
         .select("ia", "ib")
-        .localCheckpoint()
+        .transform(cut_lineage)
     )
     dens = pairs.groupBy("ia").agg(
         (F.count(F.lit(1)) + 1).alias("dens"),
@@ -2012,7 +2014,7 @@ def two_proportion_ztest(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col(success_col).cast("long")).alias("x"),
         )
-        .localCheckpoint(eager=False)
+        .transform(cut_lineage, eager=False)
     )
     n_groups = per.count()
     if n_groups != 2:

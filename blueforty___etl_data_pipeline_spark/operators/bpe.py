@@ -16,9 +16,11 @@ pair.  The distributed shape:
   aggregation (partial combine → exchange carries one row per distinct
   pair per task), (c) a global top-1 (count DESC, pair ASC — the
   deterministic tiebreak both engines reproduce), (d) a map-only
-  literal ``replace`` applying the merge to every word's symbol string.
-  The only driver traffic is the 1-row argmax per round — the same
-  bounded driver loop as Lloyd's iterations in kmeans_train.
+  literal ``replace`` applying the merge to every word's symbol string,
+  whose result is cut (``cut_lineage``) so no round's plan nests the
+  rounds before it.  The only driver traffic is the 1-row argmax per
+  round — the same bounded driver loop as Lloyd's iterations in
+  kmeans_train.
 - Symbol sequences are stored as a single ``\\x1f``-joined string, so
   applying a merge is a literal string replace (greedy non-overlapping
   left-to-right — Java and DuckDB ``replace`` agree on this), and the
@@ -31,6 +33,8 @@ corpus is scanned exactly once, by the word-count aggregation.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..lineage import cut_lineage
 
 #: Symbol separator inside the packed sequence string.  0x1F (unit
 #: separator) never survives the ``^[a-z]+$`` word filter, so it cannot
@@ -87,68 +91,37 @@ def bpe_train(
     _sql_bpe_train, which unrolls the same rounds as chained CTEs).
     """
     spark = df.sparkSession
-    base = _initial_state(word_counts(df, text_col, min_count))
-    base = base.persist()
-    base.count()  # materialize round-0 state once
+    state = cut_lineage(_initial_state(word_counts(df, text_col, min_count)))
     merges: list[tuple[int, str, str, int]] = []
-    # Fold learned merges into a LAZY replace chain over the persisted
-    # base instead of persisting + counting a new frame every round:
-    # each round then costs exactly ONE job (the top-1 collect, which
-    # re-applies at most ``materialize_every`` literal replaces map-side
-    # over the cached vocabulary-bounded state — pure codegen, far
-    # cheaper than a per-round cache materialization pass).  The chain
-    # is re-materialized every ``materialize_every`` merges so the
-    # expression depth stays bounded for large merge budgets
-    # (round-14, guide §1.2: fewer passes over the same state).
-    materialize_every = 8
-    chain = F.col("sym")
-    applied = 0
-    try:
-        for step in range(num_merges):
-            pairs = base.select(chain.alias("sym"), "cnt").select(
-                F.expr(_PAIRS_EXPR).alias("p"), "cnt"
-            ).select(
-                F.col("p")["0"].alias("lhs"),
-                F.col("p")["1"].alias("rhs"),
+    for step in range(num_merges):
+        pairs = state.select(F.expr(_PAIRS_EXPR).alias("p"), "cnt").select(
+            F.col("p")["0"].alias("lhs"),
+            F.col("p")["1"].alias("rhs"),
+            "cnt",
+        )
+        top = (
+            pairs.groupBy("lhs", "rhs")
+            .agg(F.sum("cnt").alias("pair_count"))
+            .orderBy(F.desc("pair_count"), F.asc("lhs"), F.asc("rhs"))
+            .limit(1)
+            .collect()
+        )
+        if not top:
+            break
+        lhs, rhs, pc = top[0]["lhs"], top[0]["rhs"], top[0]["pair_count"]
+        merges.append((step, lhs, rhs, int(pc)))
+        # Lazy cut: the next round's top-1 job is the only reader, so
+        # the merged state materializes inside that job — one job per
+        # round, and each round applies one replace to the last cut.
+        state = cut_lineage(
+            state.select(
+                F.replace(
+                    F.col("sym"), F.lit(lhs + SEP + rhs), F.lit(lhs + rhs)
+                ).alias("sym"),
                 "cnt",
-            )
-            top = (
-                pairs.groupBy("lhs", "rhs")
-                .agg(F.sum("cnt").alias("pair_count"))
-                .orderBy(
-                    F.desc("pair_count"), F.asc("lhs"), F.asc("rhs")
-                )
-                .limit(1)
-                .collect()
-            )
-            if not top:
-                break
-            lhs, rhs, pc = (
-                top[0]["lhs"],
-                top[0]["rhs"],
-                top[0]["pair_count"],
-            )
-            merges.append((step, lhs, rhs, int(pc)))
-            chain = F.replace(
-                chain, F.lit(lhs + SEP + rhs), F.lit(lhs + rhs)
-            )
-            applied += 1
-            if applied >= materialize_every and step < num_merges - 1:
-                nxt = base.select(chain.alias("sym"), "cnt").persist()
-                try:
-                    nxt.count()  # bound the replace-chain depth
-                except Exception:
-                    # The finally below only covers ``base``; a failed
-                    # materialization would otherwise leak the
-                    # partially-cached ``nxt`` blocks (ADVICE r14).
-                    nxt.unpersist()
-                    raise
-                base.unpersist()
-                base = nxt
-                chain = F.col("sym")
-                applied = 0
-    finally:
-        base.unpersist()
+            ),
+            eager=False,
+        )
     return spark.createDataFrame(
         [
             (step, lhs, rhs, lhs + rhs, pc)

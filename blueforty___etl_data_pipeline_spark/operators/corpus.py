@@ -1315,7 +1315,7 @@ def rake_keywords(
     w = Window.partitionBy("d").orderBy("pos")
     pt = toks.withColumn(
         "g", F.col("pos") - F.row_number().over(w)
-    ).localCheckpoint()
+    ).transform(cut_lineage)
     phrases = pt.groupBy("d", "g").agg(
         F.count(F.lit(1)).alias("plen"),
         F.array_join(
@@ -1628,7 +1628,7 @@ def oov_rate(
         oov_permille = (1000 · n_oov) ÷ n_words   (exact longs)
 
     Scale shape: the corpus explodes to words ONCE
-    (localCheckpoint(eager=False) feeds both branches), the vocabulary
+    (a lazy ``cut_lineage`` feeds both branches), the vocabulary
     is the canonical partial-agged word count pruned at ``min_count``
     (no rank window needed — membership only), and scoring is one
     hash join of words against the pruned vocab + one per-group agg.
@@ -1637,7 +1637,7 @@ def oov_rate(
     words = df.select(
         F.col(group_col).alias("grp"),
         F.explode(tokens_ws(F.col(text_col))).alias("token"),
-    ).localCheckpoint(eager=False)
+    ).transform(cut_lineage, eager=False)
     vocab = (
         words.groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))

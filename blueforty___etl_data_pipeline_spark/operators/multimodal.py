@@ -25,6 +25,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..lineage import cut_lineage
+
 #: Typed metadata carried alongside every media blob.
 MEDIA_META_SCHEMA = (
     "media_type string, mime string, width int, height int, "
@@ -815,14 +817,11 @@ def dhash_pairs(
             .drop("_n")
         )
         banded = banded.join(ok, on=["band", "slice"], how="left_semi")
-    # Lazy localCheckpoint, not persist: the upstream hash column often
-    # comes from an expensive media decode, so the banded table must
-    # materialize once and feed both join sides — but a persist here
-    # leaks cached blocks across calls (r5 advisor finding).  The
-    # checkpointed RDD is released by the ContextCleaner as soon as the
-    # returned plan is garbage collected; nothing eager runs at call
-    # time.
-    b = banded.localCheckpoint(eager=False)
+    # Lazy cut, not persist: the upstream hash column often comes from
+    # an expensive media decode, so the banded table must materialize
+    # once and feed both join sides — but a persist here leaks cached
+    # blocks across calls (r5 advisor finding).
+    b = cut_lineage(banded, eager=False)
     lhs = b.select(
         F.col("_id").alias("id_a"), F.col("_h").alias("_ha"), "band", "slice"
     )

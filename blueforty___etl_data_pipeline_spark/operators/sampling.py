@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import md5_hash64, tokens_ws
+from ..lineage import cut_lineage
 
 #: Hash-bucket resolution for fractions/splits: 1e-4 granularity.
 _BUCKETS = 10_000
@@ -858,7 +859,7 @@ def dsir_importance(
         .agg(F.count(F.lit(1)).alias("_n"))
         # two consumers (global bucket weights + scoring join): cut the
         # lineage so the md5/explode/agg pass runs once, not per branch
-        .localCheckpoint(eager=False)
+        .transform(cut_lineage, eager=False)
     )
     w = (
         doc_bucket.groupBy("_b")

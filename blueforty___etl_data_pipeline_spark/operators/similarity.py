@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import md5_hash64
 from ..functions.vectors import dot, l2_norm
+from ..lineage import cut_lineage
 from .topk import top1_per_group, topk_per_group
 
 
@@ -500,17 +501,15 @@ def kmeans_lloyd(
     argmin for assignment (centroids are k rows — always the small
     side), then posexplode → (cluster, dim) partial-aggregated sums for
     the update: shuffle volume is O(k × dim), never O(corpus).  The
-    corpus micro-vector projection is persisted once and reused by all
+    corpus micro-vector projection is cut once and reused by all
     ``iters + 1`` assignment passes.
     """
     c = corpus.select(
         F.col(id_col), _micro_vec(F.col(vec_col)).alias("_mv")
     )
-    # lazy checkpoint, not persist: the returned plan still reads the
-    # projection (ContextCleaner releases the blocks with the plan)
-    c = c.withColumn("_n", l2_norm(F.col("_mv"))).localCheckpoint(
-        eager=False
-    )
+    # cut, not persist: every assignment pass reads the projection and
+    # so does the returned plan, which leaves no point to unpersist it
+    c = cut_lineage(c.withColumn("_n", l2_norm(F.col("_mv"))), eager=False)
     k = centroids.select(
         F.col(id_col).alias(centroid_id_col),
         _micro_vec(F.col(vec_col)).alias("_kv"),
@@ -557,7 +556,7 @@ def kmeans_lloyd(
         # projection execute that plan independently — without this the
         # corpus is re-scanned 2× per iteration beyond the necessary
         # iters+1 assignment passes.
-        k = k.localCheckpoint(eager=False)
+        k = cut_lineage(k, eager=False)
     final = _assign(k)
     members = final.groupBy(centroid_id_col).agg(
         F.count(F.lit(1)).alias("n_members")
@@ -843,11 +842,10 @@ def semantic_dedup(
     with the corpus to keep clusters bounded (SemDeDup uses ~100k
     clusters at billion-doc scale).  The assignment projection feeds
     THREE plan branches (both self-join sides and the returned verdict
-    spine), so it is cut from its lineage with a LAZY localCheckpoint:
+    spine), so it is cut from its lineage with a LAZY ``cut_lineage``:
     nothing materializes at call time, the first caller action runs
-    the assignment pass exactly once, and the blocks are released by
-    the ContextCleaner when the returned plan is garbage collected —
-    no cache outlives its consumers (the r4→r5 leak is not back).
+    the assignment pass exactly once, and no cache outlives its
+    consumers (the r4→r5 leak is not back).
 
     ``max_cluster_size`` (default 512, round 11) bounds the skew risk
     the clustering alone can't: ONE degenerate centroid cell (think a
@@ -873,7 +871,7 @@ def semantic_dedup(
             l2_norm(F.col(vec_col)).alias("_n"),
         ),
         on=id_col,
-    ).localCheckpoint(eager=False)
+    ).transform(cut_lineage, eager=False)
     lower = b
     if max_cluster_size is not None:
         w = Window.partitionBy("centroid_id").orderBy(F.asc(id_col))
@@ -1430,7 +1428,7 @@ def margin_mine(
         # one scored table, three consumers (best pair + two
         # neighborhood sums): cut the lineage so the cross join and
         # cosine arithmetic run once
-        .localCheckpoint(eager=False)
+        .transform(cut_lineage, eager=False)
     )
     return _margin_from_scored(scored, k, margin_threshold_permille)
 
@@ -1610,7 +1608,7 @@ def facility_location(
         raise ValueError("k must be >= 1")
     mv = df.select(
         F.col(id_col).alias("_id"), _micro_vec(F.col(vec_col)).alias("_v")
-    ).localCheckpoint(eager=False)
+    ).transform(cut_lineage, eager=False)
 
     chosen: list[int] = []
     chosen_vecs: list[list[float]] = []
@@ -1760,9 +1758,7 @@ def margin_mine_blocked(
             .groupBy("_lid", "_rid")
             .agg(F.max("_c").alias("_c"))
         )
-    scored = cand.filter(F.col("_c").isNotNull()).localCheckpoint(
-        eager=False
-    )
+    scored = cut_lineage(cand.filter(F.col("_c").isNotNull()), eager=False)
     return _margin_from_scored(scored, k, margin_threshold_permille)
 
 
@@ -1799,7 +1795,7 @@ def kcenter_coreset(
         raise ValueError("k must be >= 1")
     mv = df.select(
         F.col(id_col).alias("_id"), _micro_vec(F.col(vec_col)).alias("_v")
-    ).localCheckpoint(eager=False)
+    ).transform(cut_lineage, eager=False)
 
     def dist_to(center_vec):
         arr = F.array(*[F.lit(float(x)) for x in center_vec])
@@ -1832,7 +1828,7 @@ def kcenter_coreset(
                 "_id",
                 "_v",
                 F.least(F.col("_d"), F.col("_nd")).alias("_d"),
-            ).localCheckpoint(eager=False)
+            ).transform(cut_lineage, eager=False)
     spark = df.sparkSession
     return spark.createDataFrame(
         selected, "round int, vec_id long, radius_sq long"

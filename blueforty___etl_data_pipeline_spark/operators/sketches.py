@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..lineage import cut_lineage
+
 # 48 bits of the md5 hex: small enough that the KMV numerator
 # (k-1) * HASH_SPACE stays exactly representable in a signed 64-bit
 # long for any practical k (k <= 2^14), so every estimate is EXACT
@@ -261,7 +263,7 @@ def bloom_semi_join(
     fkeys = (
         fact.select(F.col(key_col).alias("_fk"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(cut_lineage, eager=False)
     )
     probes = fkeys.select(
         "_fk", F.explode(positions(F.col("_fk"))).alias("_bit")

@@ -26,6 +26,54 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 EDGES = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (7, 8)]
 #: (child, parent): a forest of height 5 rooted at 0 plus a stub at 10
 TREE = [(1, 0), (2, 1), (3, 2), (4, 3), (5, 4), (6, 1), (7, 0), (11, 10)]
+#: two direction-clusters for kmeans_lloyd, seeded from ids 0 and 10
+VECS = [
+    (0, [1.0, 0.0, 0.0]), (1, [0.9, 0.1, 0.0]), (2, [0.8, 0.2, 0.1]),
+    (10, [0.0, 1.0, 0.0]), (11, [0.1, 0.9, 0.0]), (12, [0.0, 0.8, 0.2]),
+]
+#: (source, text) for oov_rate and bpe_train
+DOCS = [
+    ("s1", "lower lowest newer newest low low"),
+    ("s2", "wider widest newer low lower zzz"),
+    ("s3", "newest lowest low qqq"),
+]
+
+
+def extra_runs(spark):
+    """Cut sites beyond the graph walks, as name -> thunk returning
+    sorted result rows: the same calls run in the shared session and
+    in the reliable-path subprocess."""
+    from blueforty___etl_data_pipeline_spark.operators import (
+        bpe,
+        corpus,
+        graph,
+        similarity,
+    )
+
+    edges = spark.createDataFrame(EDGES, "src long, dst long")
+    vecs = spark.createDataFrame(VECS, "vec_id long, embedding array<double>")
+    docs = spark.createDataFrame(DOCS, "source string, text string")
+    seeds = vecs.filter("vec_id IN (0, 10)")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    return {
+        # eager cut every round
+        "label_propagation": lambda: rows(
+            graph.label_propagation(edges, rounds=3)
+        ),
+        # lazy cut per iteration, read by the broadcast and the checksum
+        "kmeans_lloyd": lambda: rows(
+            similarity.kmeans_lloyd(vecs, seeds, iters=2)
+        ),
+        # lazy cut read by two branches (vocabulary and scoring)
+        "oov_rate": lambda: rows(corpus.oov_rate(docs, min_count=2)),
+        # lazy cut per merge round, read by the next round's top-1 job
+        "bpe_train": lambda: rows(
+            bpe.bpe_train(docs, num_merges=4, min_count=1)
+        ),
+    }
 
 
 def test_cut_lineage_dispatches_local_without_checkpoint_dir(spark):
@@ -110,6 +158,9 @@ spark.sparkContext.setCheckpointDir(ckpt_dir)
 
 from blueforty___etl_data_pipeline_spark.operators import graph as g
 
+sys.path.insert(0, os.path.join({repo!r}, "tests"))
+from test_lineage import extra_runs
+
 edges = spark.createDataFrame({edges!r}, "src long, dst long")
 pairs = edges.toDF("id_a", "id_b")
 
@@ -134,11 +185,23 @@ tree = sorted(
 ckpt_files = []
 for root, _dirs, files in os.walk(ckpt_dir):
     ckpt_files.extend(os.path.join(root, f) for f in files)
+
+
+def n_files():
+    return sum(len(files) for _root, _dirs, files in os.walk(ckpt_dir))
+
+
+# Each extra run must itself write checkpoint files.
+extra = {{}}
+for name, run in extra_runs(spark).items():
+    before = n_files()
+    extra[name] = {{"rows": run(), "new_files": n_files() - before}}
 print(json.dumps({{
     "comps": comps,
     "ranks": ranks,
     "tree": tree,
     "n_ckpt_files": len(ckpt_files),
+    "extra": extra,
 }}))
 spark.stop()
 """
@@ -169,6 +232,8 @@ def test_cut_lineage_reliable_path_identical_results(spark, tmp_path):
         ).collect()
     )
 
+    expect_extra = {name: run() for name, run in extra_runs(spark).items()}
+
     ckpt_dir = str(tmp_path / "ckpt")
     script = _RELIABLE_SCRIPT.format(repo=REPO, edges=EDGES, tree=TREE)
     proc = subprocess.run(
@@ -186,3 +251,7 @@ def test_cut_lineage_reliable_path_identical_results(spark, tmp_path):
     assert [tuple(t) for t in got["tree"]] == expect_tree
     # The reliable checkpoint actually materialized to the dir.
     assert got["n_ckpt_files"] > 0
+    for name, want in expect_extra.items():
+        assert want, name  # each run produced rows to compare
+        assert [tuple(t) for t in got["extra"][name]["rows"]] == want, name
+        assert got["extra"][name]["new_files"] > 0, name

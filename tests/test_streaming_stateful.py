@@ -685,8 +685,8 @@ def test_stream_partition_scope_is_adaptive_and_restores(spark, tmp_path):
     # their state-store partition count to spark.sql.shuffle.partitions
     # at start, so the entry scopes a scale-adaptive value around each
     # drain.  Pin the derivation (floor min(8, cores), ~32 MB/partition,
-    # capped at the session conf, env override wins) and that the scope
-    # restores the session value even on error.
+    # capped at the session conf) and that the scope restores the
+    # session value even on error.
     import os as _os
 
     from __spark_entry__ import (
@@ -708,12 +708,6 @@ def test_stream_partition_scope_is_adaptive_and_restores(spark, tmp_path):
         f.truncate(400 << 20)  # sparse 400 MB
     assert _stream_partitions_for(big, 32, 32) == 13
     assert _stream_partitions_for(big, 4, 32) == 4
-    # env override wins
-    _os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"] = "9"
-    try:
-        assert _stream_partitions_for(src, 32, 32) == 9
-    finally:
-        del _os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"]
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
     expected = str(_stream_partitions_for(
@@ -750,21 +744,6 @@ def test_stream_partition_floor_follows_cores(tmp_path):
     assert _stream_partitions_for(str(src), 32, 4) == 13
     # a source that cannot be listed keeps the session value
     assert _stream_partitions_for(str(tmp_path / "missing"), 32, 4) == 32
-
-
-def test_stream_partition_env_parse_never_raises(tmp_path, monkeypatch):
-    from __spark_entry__ import _stream_partitions_for
-
-    src = tmp_path / "staged"
-    src.mkdir()
-    (src / "part-0.parquet").write_bytes(b"x" * 100)
-    for bad in ("", "eight", "8.5", " "):
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", bad)
-        assert _stream_partitions_for(str(src), 32, 4) == 4
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "0")
-    assert _stream_partitions_for(str(src), 32, 4) == 1
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", " 12 ")
-    assert _stream_partitions_for(str(src), 32, 4) == 12
 
 
 def test_stream_partition_size_counts_every_data_file(tmp_path):

@@ -1,32 +1,35 @@
-"""Back-to-back A/B of named queries: base worktree vs this tree.
+"""Paired, interleaved A/B of named queries: a base checkout vs this tree.
 
-Runs tools/time_queries.py in the pinned base worktree, then in this
-tree, alternating (B, A, B, A) so host drift cancels to first order;
-reports per-query medians and ratios.
+Usage: python tools/ab_compare.py <base_tree> [--pairs N] [--runs N] q1 q2 ...
 
-Usage: python tools/ab_compare.py <base_worktree> [--runs N] q1 q2 ...
-Output: .tmp/ab_compare.json
+Each pair runs tools/time_queries.py (this tree's copy, so both sides
+use the same harness) once against the base checkout and once against
+this tree, each in a fresh Spark session.  The side that runs first
+alternates from pair to pair so host drift cancels to first order.
+Per query it reports the median time of each side, the base side's
+interquartile range, how many pairs this tree won, and the job counts
+of both sides (counts do not drift between sessions).
+
+Output: a summary on stdout and the full record in .tmp/ab_compare.json.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TIME_QUERIES = os.path.join(REPO, "tools", "time_queries.py")
 
 
-def _run(tree: str, names: list[str], runs: int) -> dict[str, float]:
+def _run(tree: str, names: list[str], runs: int) -> dict[str, dict]:
     out = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(tree, "tools", "time_queries.py"),
-            "--runs",
-            str(runs),
-            *names,
-        ],
+        [sys.executable, TIME_QUERIES, "--runs", str(runs), "--tree", tree,
+         *names],
         cwd=tree,
         capture_output=True,
         text=True,
@@ -40,38 +43,54 @@ def _run(tree: str, names: list[str], runs: int) -> dict[str, float]:
     raise RuntimeError(f"no JSON from {tree}: {out.stdout[-500:]}")
 
 
+def _iqr(xs: list[float]) -> float | None:
+    if len(xs) < 2:
+        return None
+    q1, _, q3 = statistics.quantiles(xs, n=4)
+    return round(q3 - q1, 3)
+
+
 def main() -> None:
-    args = sys.argv[1:]
-    base = os.path.abspath(args.pop(0))
-    runs = 3
-    if args and args[0] == "--runs":
-        runs = int(args[1])
-        args = args[2:]
-    names = args
-    pairs: list[tuple[dict, dict]] = []
-    for i in range(2):  # two interleaved passes
-        b = _run(base, names, runs)
-        a = _run(REPO, names, runs)
-        pairs.append((b, a))
-        print(f"pass {i}: base={b} head={a}", flush=True)
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("base")
+    ap.add_argument("--pairs", type=int, default=5)
+    ap.add_argument("--runs", type=int, default=3)
+    ap.add_argument("names", nargs="+")
+    args = ap.parse_args()
+    sides = {"base": os.path.abspath(args.base), "head": REPO}
+
+    pairs: list[dict[str, dict]] = []
+    for i in range(args.pairs):
+        order = ("base", "head") if i % 2 == 0 else ("head", "base")
+        pair = {side: _run(sides[side], args.names, args.runs)
+                for side in order}
+        pairs.append(pair)
+        print(f"pair {i} ({order[0]} first): {json.dumps(pair)}", flush=True)
+
     result = {}
-    for n in names:
-        bs = [p[0][n] for p in pairs if n in p[0]]
-        hs = [p[1][n] for p in pairs if n in p[1]]
-        if not bs or not hs:
-            result[n] = {"base": bs, "head": hs, "ratio": None}
-            continue
-        bm = sorted(bs)[len(bs) // 2]
-        hm = sorted(hs)[len(hs) // 2]
-        result[n] = {
-            "base_runs": bs,
-            "head_runs": hs,
-            "base": bm,
-            "head": hm,
-            "speedup": round(bm / hm, 3) if hm else None,
-        }
-        print(f"{n}: base {bm:.3f}s -> head {hm:.3f}s "
-              f"({bm / hm:.2f}x)", flush=True)
+    for n in args.names:
+        rec = {side: {"s": [p[side][n]["s"] for p in pairs],
+                      "jobs": [p[side][n]["jobs"] for p in pairs]}
+               for side in sides}
+        bm = statistics.median(rec["base"]["s"])
+        hm = statistics.median(rec["head"]["s"])
+        rec.update(
+            base_median=bm,
+            head_median=hm,
+            base_iqr=_iqr(rec["base"]["s"]),
+            head_wins=sum(p["head"][n]["s"] < p["base"][n]["s"]
+                          for p in pairs),
+            speedup=round(bm / hm, 3) if hm else None,
+        )
+        result[n] = rec
+        print(
+            f"{n}: base {bm:.3f}s (IQR {rec['base_iqr']}) -> head {hm:.3f}s "
+            f"({rec['speedup']}x, head won {rec['head_wins']}/{len(pairs)}); "
+            f"jobs {statistics.median(rec['base']['jobs'])} -> "
+            f"{statistics.median(rec['head']['jobs'])}",
+            flush=True,
+        )
+    os.makedirs(os.path.join(REPO, ".tmp"), exist_ok=True)
     with open(os.path.join(REPO, ".tmp", "ab_compare.json"), "w") as f:
         json.dump(result, f, indent=1)
 
