@@ -666,6 +666,11 @@ def q_composite_key_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = li.groupBy(F.col("l_orderkey").alias("k")).agg(
         F.max("l_shipdate").alias("max_ship")
     )
+    # Spread only the join's probe side of the single-row-group scan, on
+    # the join key (guide §2.5), so the probe runs on every core.  The
+    # max aggregate keeps its map-side partial aggregate: fed from the
+    # spread it would shuffle every row (paired A/B, sf0.1: slower).
+    li = spread_scan(li, "l_orderkey")
     out = composite_key_join(
         li, mx, [("l_orderkey", "k"), ("l_shipdate", "max_ship")]
     )
@@ -702,8 +707,14 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: grouped SUM/AVG/COUNT pricing summary over the
     scan with the shipdate predicate pushed into Parquet."""
     _prep(spark)
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
+    # Spread the single-row-group scan before the decimal aggregation
+    # (guide §2.5); decimal sums commute, so the hash key only has to
+    # spread rows evenly.
+    li = spread_scan(
+        _t(spark, sf_dir, "lineitem").filter(
+            F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
+        ),
+        "l_orderkey",
     )
     charge = (_disc_price() * (F.lit(1).cast(_D2) + F.col("l_tax").cast(_D2)))
     qty = F.col("l_quantity").cast(_DEC)
@@ -2495,9 +2506,10 @@ def q_ngram_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         ngram_model_score,
     )
 
-    # Spread the single-row-group scan before the per-row trigram-hash
-    # fold (guide §2.5, round-15); scoring is per-row.
-    return ngram_model_score(spread_scan(_t(spark, sf_dir, "documents")))
+    # Spread the single-row-group scan on doc_id before the per-row
+    # trigram-hash fold (guide §2.5); scoring is per-row.
+    docs = spread_scan(_t(spark, sf_dir, "documents"), "doc_id")
+    return ngram_model_score(docs)
 
 
 def _sql_ngram_model_score(n_buckets: int = 1024) -> str:
@@ -3330,10 +3342,10 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         containment_pairs,
     )
 
-    # Spread the single-row-group scan before the per-row shingle
-    # explode (guide §2.5, round-15); pair counts are join-keyed.
+    # Spread the single-row-group scan on doc_id before the per-row
+    # shingle explode (guide §2.5); pair counts are join-keyed.
     return containment_pairs(
-        spread_scan(_t(spark, sf_dir, "documents")),
+        spread_scan(_t(spark, sf_dir, "documents"), "doc_id"),
         max_candidates_per_shingle=_SHINGLE_CAP,
     )
 
@@ -3409,9 +3421,9 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         simhash_arrow,
     )
 
-    # Spread the single-row-group scan: the Arrow fingerprint pass
-    # otherwise runs in one Python worker (guide §2.5/§4, round-15).
-    docs = spread_scan(_t(spark, sf_dir, "documents"))
+    # Spread the single-row-group scan on doc_id: the Arrow fingerprint
+    # pass otherwise runs in one Python worker (guide §2.5/§4).
+    docs = spread_scan(_t(spark, sf_dir, "documents"), "doc_id")
     return simhash_arrow(docs)
 
 
@@ -3420,9 +3432,9 @@ def q_simhash_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_simhash, so the driver proves the two implementations produce
     bit-identical fingerprints."""
     _prep(spark)
-    # Spread the single-row-group scan before the 60-bit per-row fold
-    # (guide §2.5, round-15); the fingerprint is per-row.
-    docs = spread_scan(_t(spark, sf_dir, "documents"))
+    # Spread the single-row-group scan on doc_id before the 60-bit
+    # per-row fold (guide §2.5); the fingerprint is per-row.
+    docs = spread_scan(_t(spark, sf_dir, "documents"), "doc_id")
     return docs.select("doc_id", simhash64(F.col("text")).alias("simhash"))
 
 
@@ -3629,8 +3641,8 @@ def q_language_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     validated before gating a 100 TB corpus on it."""
     _prep(spark)
     # Spread the single-row-group scan feeding the per-row lexicon
-    # scoring (guide §2.5, round-15).
-    docs = spread_scan(_t(spark, sf_dir, "documents"))
+    # scoring (guide §2.5) on doc_id, the key the gold labels join on.
+    docs = spread_scan(_t(spark, sf_dir, "documents"), "doc_id")
     pred = language_id(docs).select("doc_id", "lang_pred")
     m = (
         docs.select("doc_id", "lang")
@@ -4336,8 +4348,8 @@ def q_ann_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer micro fixed-point: per query contribute 1e6 div rank (0 if
     absent), MRR = sum div n_queries."""
     _prep(spark)
-    # Spread the single-row-group corpus scan (guide §2.5, round-15).
-    emb = spread_scan(_t(spark, sf_dir, "embeddings"))
+    # Spread the single-row-group corpus scan on vec_id (guide §2.5).
+    emb = spread_scan(_t(spark, sf_dir, "embeddings"), "vec_id")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     exact = ann_brute_force(emb, queries, k=2, round_decimals=6)
     # The brute-force truth feeds two rank joins and two count aggs; a
@@ -4449,9 +4461,9 @@ def q_ann_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query nDCG is integer permille, and the mean is integer div —
     engine-exact with zero in-engine logarithms."""
     _prep(spark)
-    # Spread the single-row-group corpus scan feeding the brute-force
-    # truth and both candidate generators (guide §2.5, round-15).
-    emb = spread_scan(_t(spark, sf_dir, "embeddings"))
+    # Spread the single-row-group corpus scan on vec_id, feeding the
+    # brute-force truth and both candidate generators (guide §2.5).
+    emb = spread_scan(_t(spark, sf_dir, "embeddings"), "vec_id")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     wq = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("neighbor_id")
@@ -4716,9 +4728,9 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: strided-sample centroids, nearest-cell assignment,
     nprobe=2 probing — the equi-join scale path for vector search."""
     _prep(spark)
-    # Spread the single-row-group corpus scan feeding the N x k
-    # assignment pass (guide §2.5, round-15).
-    emb = spread_scan(_t(spark, sf_dir, "embeddings"))
+    # Spread the single-row-group corpus scan on vec_id before the
+    # N x k assignment pass (guide §2.5).
+    emb = spread_scan(_t(spark, sf_dir, "embeddings"), "vec_id")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     return ann_ivf(emb, queries, k=5, centroid_stride=50, nprobe=2)
 
@@ -4770,8 +4782,8 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheaper + lower recall; higher nprobe → more lists probed, costlier
     + higher recall."""
     _prep(spark)
-    # Spread the single-row-group corpus scan (guide §2.5, round-15).
-    emb = spread_scan(_t(spark, sf_dir, "embeddings"))
+    # Spread the single-row-group corpus scan on vec_id (guide §2.5).
+    emb = spread_scan(_t(spark, sf_dir, "embeddings"), "vec_id")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     # The exact result feeds BOTH recall joins and the totals agg — a
     # lazy cut materializes the brute-force scan once (a persist here
@@ -4840,9 +4852,9 @@ def q_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe_ivf_index,
     )
 
-    # Spread the single-row-group corpus scan feeding the index
-    # build's assignment pass (guide §2.5, round-15).
-    emb = spread_scan(_t(spark, sf_dir, "embeddings"))
+    # Spread the single-row-group corpus scan on vec_id before the
+    # index build's assignment pass (guide §2.5).
+    emb = spread_scan(_t(spark, sf_dir, "embeddings"), "vec_id")
     path = os.path.join(SCRATCH, "ivf_index")
     build_ivf_index(emb, path, centroid_stride=50)
     queries = emb.filter(F.col("vec_id") % 100 == 0)
@@ -4859,8 +4871,8 @@ def q_ann_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         rrf_fuse,
     )
 
-    # Spread the single-row-group corpus scan (guide §2.5, round-15).
-    emb = spread_scan(_t(spark, sf_dir, "embeddings"))
+    # Spread the single-row-group corpus scan on vec_id (guide §2.5).
+    emb = spread_scan(_t(spark, sf_dir, "embeddings"), "vec_id")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     lsh = ann_lsh_bucketed(
         emb, queries, k=5, n_planes=8, dim=64, round_decimals=6
@@ -6265,9 +6277,9 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup run.  The exact ground truth runs with the default-on
     hot-shingle cap (``_SHINGLE_CAP``), matching the capped oracle."""
     _prep(spark)
-    # Spread the single-row-group scan: the MinHash Arrow pass and
-    # the shingle explode otherwise run on one task (guide §2.5, r15).
-    docs = spread_scan(_t(spark, sf_dir, "documents"))
+    # Spread the single-row-group scan on doc_id: the MinHash Arrow pass
+    # and the shingle explode otherwise run on one task (guide §2.5).
+    docs = spread_scan(_t(spark, sf_dir, "documents"), "doc_id")
     # Both pair sets feed the hit join AND their own count agg; lazy
     # lineage cuts run the exact-Jaccard and MinHash pipelines ONCE
     # each instead of twice (round-14, guide §5).
@@ -7139,10 +7151,9 @@ def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max reprs) reshaped with stack — no collect, no second scan."""
     _prep(spark)
     # Single-row-group input: the 6-way countDistinct Expand fuses into
-    # the one scan task and runs serially; spread it first (guide §2.5,
-    # round-15 — A/B 2.9→1.3 s).  Counts/min/max are partition-
-    # invariant.
-    o = spread_scan(_t(spark, sf_dir, "orders"))
+    # the one scan task and runs serially; spread it on o_orderkey first
+    # (guide §2.5).  Counts/min/max are partition-invariant.
+    o = spread_scan(_t(spark, sf_dir, "orders"), "o_orderkey")
     return profile_table(
         o,
         columns=[
@@ -10468,10 +10479,10 @@ def q_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the driver's sf0.01/sf0.1 fixtures (max vec_id 1999), so
     results are hash-identical to the uncapped form there."""
     _prep(spark)
-    # Spread the single-row-group corpus scan: every Lloyd round's
-    # N x k assignment otherwise fuses into one scan task (guide §2.5,
-    # round-15); integer centroid sums commute.
-    emb = spread_scan(_t(spark, sf_dir, "embeddings"))
+    # Spread the single-row-group corpus scan on vec_id: every Lloyd
+    # round's N x k assignment otherwise fuses into one scan task (guide
+    # §2.5); integer centroid sums commute.
+    emb = spread_scan(_t(spark, sf_dir, "embeddings"), "vec_id")
     cents = emb.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 2000))
     return kmeans_lloyd(emb, cents, iters=2)
 
@@ -10851,9 +10862,9 @@ def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         corr_matrix,
     )
 
-    # Spread the single-row-group scan before the exact-decimal moment
-    # products (guide §2.5, round-15); decimal sums commute.
-    li = spread_scan(_t(spark, sf_dir, "lineitem"))
+    # Spread the single-row-group scan on l_orderkey before the
+    # exact-decimal moment products (guide §2.5); decimal sums commute.
+    li = spread_scan(_t(spark, sf_dir, "lineitem"), "l_orderkey")
     return corr_matrix(
         li, ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
     )
@@ -10979,8 +10990,10 @@ def q_cms_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # Spread the single-row-group scan before the per-row md5 digest
-    # (guide §2.5, round-15); sketch cells are commutative sums.
-    li = spread_scan(_t(spark, sf_dir, "lineitem"))
+    # (guide §2.5); sketch cells are commutative sums.  Hashed on
+    # l_partkey, the exact-count aggregate's key, so the spread is also
+    # that aggregate's shuffle.
+    li = spread_scan(_t(spark, sf_dir, "lineitem"), "l_partkey")
     sketch = count_min_build(li, "l_partkey", width=256, depth=4)
     probes = (
         _t(spark, sf_dir, "part")
@@ -11753,11 +11766,13 @@ def q_lof_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Density-ratio outlier factor (operators/analytics.
     density_ratio_outliers — the integer-exact LOF simplification)
     over the first two embedding dimensions: quantize at scale 64,
-    eps-ball d² ≤ 16, per-cell neighbor cap 64 (every sf0.01 cell is
-    under it, so the oracle's brute self-join is a strict equality).
-    The eps search is a 3×3 cell equi-join, the factor ONE exact
-    long floor-division — never a distance self-join, never a float
-    chain."""
+    eps-ball d² ≤ 16, per-cell neighbor cap 64.  sf0.1 has cells of up
+    to 86 points, so the oracle replays the cap (each cell's 64
+    lowest-id points form its neighbor pool; a sampled neighbor with no
+    pool-visible neighbors counts density 2) and is a strict equality
+    at every scale.  The eps search is a 3×3 cell equi-join, the factor
+    ONE exact long floor-division — never a distance self-join, never a
+    float chain."""
     _prep(spark)
     from blueforty___etl_data_pipeline_spark.operators.analytics import (
         density_ratio_outliers,
@@ -11781,9 +11796,17 @@ WITH pts AS (
          CAST(FLOOR(CAST(embedding[1] AS DOUBLE) * 64) AS BIGINT) AS qx,
          CAST(FLOOR(CAST(embedding[2] AS DOUBLE) * 64) AS BIGINT) AS qy
   FROM embeddings),
+pool AS (
+  SELECT id, qx, qy FROM (
+    SELECT *, ROW_NUMBER() OVER (
+                PARTITION BY CAST(FLOOR(qx / 4.0) AS BIGINT),
+                             CAST(FLOOR(qy / 4.0) AS BIGINT)
+                ORDER BY id) AS rn
+    FROM pts)
+  WHERE rn <= 64),
 pairs AS (
   SELECT a.id AS ia, b.id AS ib
-  FROM pts a JOIN pts b
+  FROM pts a JOIN pool b
     ON a.id <> b.id
    AND (a.qx - b.qx) * (a.qx - b.qx)
      + (a.qy - b.qy) * (a.qy - b.qy) <= 16),
@@ -11791,8 +11814,8 @@ dens AS (
   SELECT ia AS id, COUNT(*) + 1 AS dens, COUNT(*) AS n_nb
   FROM pairs GROUP BY ia),
 sums AS (
-  SELECT p.ia AS id, SUM(d.dens) AS sd
-  FROM pairs p JOIN dens d ON d.id = p.ib
+  SELECT p.ia AS id, SUM(COALESCE(d.dens, 2)) AS sd
+  FROM pairs p LEFT JOIN dens d ON d.id = p.ib
   GROUP BY p.ia)
 SELECT pts.id AS vec_id,
        CAST(COALESCE(dens.n_nb, 0) AS BIGINT) AS n_neighbors,
@@ -14112,14 +14135,14 @@ def q_video_frames_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .filter(F.col("doc_id") % 40 == 5)
-        # The sampled set is tiny (1 in 40 docs) but every row costs
-        # ~10ms of pure-Python codec work downstream; without this the
-        # whole encode+decode chain runs on however few input splits
-        # the scan yields (ONE at sf0.1 — fully serial on 32 cores).
-        # One narrow exchange of (id, text) rows buys full-core
-        # parallelism for the Arrow-batched decode stages.
-        .repartition(spark.sparkContext.defaultParallelism)
     )
+    # The sampled set is tiny (1 in 40 docs) but every row costs ~10ms
+    # of pure-Python codec work downstream; on a single-task scan the
+    # whole encode+decode chain would run serially.  One exchange of
+    # (id, text) rows hashed on doc_id buys full-core parallelism for
+    # the Arrow-batched decode stages (identity when the scan is
+    # already parallel).
+    docs = spread_scan(docs, "doc_id")
 
     def to_avi(batches):
         import hashlib as _hl
@@ -14189,14 +14212,14 @@ def q_mp4_frames_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .filter(F.col("doc_id") % 40 == 7)
-        # The sampled set is tiny (1 in 40 docs) but every row costs
-        # ~10ms of pure-Python codec work downstream; without this the
-        # whole encode+decode chain runs on however few input splits
-        # the scan yields (ONE at sf0.1 — fully serial on 32 cores).
-        # One narrow exchange of (id, text) rows buys full-core
-        # parallelism for the Arrow-batched decode stages.
-        .repartition(spark.sparkContext.defaultParallelism)
     )
+    # The sampled set is tiny (1 in 40 docs) but every row costs ~10ms
+    # of pure-Python codec work downstream; on a single-task scan the
+    # whole encode+decode chain would run serially.  One exchange of
+    # (id, text) rows hashed on doc_id buys full-core parallelism for
+    # the Arrow-batched decode stages (identity when the scan is
+    # already parallel).
+    docs = spread_scan(docs, "doc_id")
 
     def to_mp4(batches):
         import hashlib as _hl
@@ -14270,14 +14293,14 @@ def q_mkv_frames_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .filter(F.col("doc_id") % 40 == 17)
-        # The sampled set is tiny (1 in 40 docs) but every row costs
-        # ~10ms of pure-Python codec work downstream; without this the
-        # whole encode+decode chain runs on however few input splits
-        # the scan yields (ONE at sf0.1 — fully serial on 32 cores).
-        # One narrow exchange of (id, text) rows buys full-core
-        # parallelism for the Arrow-batched decode stages.
-        .repartition(spark.sparkContext.defaultParallelism)
     )
+    # The sampled set is tiny (1 in 40 docs) but every row costs ~10ms
+    # of pure-Python codec work downstream; on a single-task scan the
+    # whole encode+decode chain would run serially.  One exchange of
+    # (id, text) rows hashed on doc_id buys full-core parallelism for
+    # the Arrow-batched decode stages (identity when the scan is
+    # already parallel).
+    docs = spread_scan(docs, "doc_id")
 
     def to_mkv(batches):
         import hashlib as _hl
@@ -17686,17 +17709,15 @@ def q_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
         mahalanobis_outliers,
     )
 
-    # Spread the single-row-group scan before the per-row HUGEINT
-    # distance math (guide §2.5, round-15); exact integer moments and
+    # Spread the single-row-group scan on l_orderkey before the per-row
+    # HUGEINT distance math (guide §2.5); exact integer moments and
     # counts are partition-invariant.
-    li = spread_scan(
-        _t(spark, sf_dir, "lineitem").select(
-            F.col("l_quantity").cast("long").alias("qty"),
-            F.expr(
-                "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS"
-                " BIGINT) div 10000"
-            ).alias("price_h"),
-        )
+    li = spread_scan(_t(spark, sf_dir, "lineitem"), "l_orderkey").select(
+        F.col("l_quantity").cast("long").alias("qty"),
+        F.expr(
+            "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS"
+            " BIGINT) div 10000"
+        ).alias("price_h"),
     )
     return mahalanobis_outliers(li, "qty", "price_h")
 
@@ -17917,9 +17938,11 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         ngram_novelty,
     )
 
-    # Spread the single-row-group scan before the per-row shingle
-    # explode (guide §2.5, round-15); min-id attribution is exact.
-    return ngram_novelty(spread_scan(_t(spark, sf_dir, "documents")))
+    # Spread the single-row-group scan on doc_id before the per-row
+    # shingle explode (guide §2.5); min-id attribution is exact.
+    return ngram_novelty(
+        spread_scan(_t(spark, sf_dir, "documents"), "doc_id")
+    )
 
 
 _SQL_NGRAM_NOVELTY = f"""
@@ -17949,10 +17972,10 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsir_importance,
     )
 
-    # Spread the single-row-group scan feeding the per-row bigram
-    # hashing (guide §2.5, round-15).
+    # Spread the single-row-group scan on doc_id before the per-row
+    # bigram hashing (guide §2.5).
     return dsir_importance(
-        spread_scan(_t(spark, sf_dir, "documents")),
+        spread_scan(_t(spark, sf_dir, "documents"), "doc_id"),
         F.col("source") == "src0"
     )
 
@@ -18595,15 +18618,16 @@ def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # provably complete at gate scale); past target_bucket the LSH
     # tables engage and per-query work stays ~n_tables·target_bucket,
     # constant in corpus size where the brute form was linear.
-    # Spread the stream (query) side of the miner's cross join: at
-    # this scale the blocked path degenerates to the exact brute pass
-    # and ALL |L|·|R| cosines fuse into the left side's one scan task
-    # (guide §2.5, round-15); scores/windows are totally ordered.
+    # Spread the stream (query) side of the miner's cross join on
+    # vec_id: at this scale the blocked path degenerates to the exact
+    # brute pass and ALL |L|·|R| cosines fuse into the left side's one
+    # scan task (guide §2.5); scores/windows are totally ordered.
     return margin_mine_blocked(
         spread_scan(
             emb.filter(
                 (F.col("vec_id") % 2 == 0) & (F.col("vec_id") < 500)
-            )
+            ),
+            "vec_id",
         ),
         emb.filter(F.col("vec_id") % 2 == 1),
         k=4,

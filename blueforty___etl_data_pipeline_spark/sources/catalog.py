@@ -8,8 +8,11 @@ pushdown, column pruning, and stats from the Parquet footers.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -25,10 +28,77 @@ TABLES = (
 )
 
 
+#: Session confs that change what parquet schema inference returns for
+#: the same file; they are part of the schema-cache key.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: (absolute path, inference conf values) -> (file state, inferred
+#: schema).  A process-wide memo is safe to share: the entry is a pure
+#: function of the bytes on disk and the confs, and a rewrite replaces
+#: the path's entry.  Only schemas are kept, never DataFrames: every
+#: load builds a fresh relation, so a self-join of two loads gets
+#: distinct attribute ids on each side.
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def _file_state(path: str) -> tuple | None:
+    """Identity of the bytes at ``path``: (size, mtime) of a file, or the
+    sorted (relative path, size, mtime) listing of a directory's data
+    files (names starting with ``.`` or ``_`` are skipped, as Spark
+    skips them).  ``None`` when the path cannot be stat'ed (remote
+    object stores, missing files)."""
+    try:
+        st = os.stat(path)
+        if not os.path.isdir(path):
+            return (st.st_size, st.st_mtime_ns)
+        listing = []
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+            for f in files:
+                if f.startswith((".", "_")):
+                    continue
+                full = os.path.join(root, f)
+                fst = os.stat(full)
+                listing.append(
+                    (os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns)
+                )
+        return tuple(sorted(listing))
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the inferred schema pinned after
+    the first read: schema inference runs a Spark job per read, so a
+    cached schema (keyed on the file's identity and the inference confs)
+    is passed back in through ``spark.read.schema``.  Rewriting the file
+    or flipping one of the confs re-infers."""
+    state = _file_state(path)
+    if state is None:
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path),
+        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+    )
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == state:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (state, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic table.  Plain columnar scan: filters and column
     selections applied by the caller reach the Parquet reader (verify with
-    ``.explain`` → ``PushedFilters`` / ``ReadSchema``).
+    ``.explain`` → ``PushedFilters`` / ``ReadSchema``).  The schema is
+    inferred once per file version and pinned on later reads
+    (``_read_parquet``), so a repeat load starts no Spark job.
 
     ``events`` needs special handling: some generations of the fixture
     store ``ts`` as parquet TIMESTAMP(NANOS), which Spark 4 refuses to
@@ -44,7 +114,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             df = df.withColumn(
@@ -70,7 +140,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 )
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def ensure_namespace(spark: SparkSession, database: str) -> None:

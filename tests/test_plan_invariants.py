@@ -265,13 +265,18 @@ def test_round11_expensive_query_plan_pins(spark):
     sf = SF_DIR
 
     # ngram_model_score: model inference at scan speed — PLANS.md
-    # claims zero Generate and no scoring-induced shuffle; since
-    # round 15 the ONLY allowed exchange is the adaptive scan-spread
-    # round-robin (spread_scan, identity at scale), never a hash/range
-    # partitioning from the scorer itself
+    # claims zero Generate and no scoring-induced shuffle; the ONLY
+    # allowed exchange is the adaptive scan spread (spread_scan's
+    # REPARTITION_BY_NUM hash on doc_id, identity at scale), never a
+    # hash/range partitioning from the scorer itself
     p = _fmt(qs["ngram_model_score"](spark, sf))
     assert "Generate" not in p
-    assert "hashpartitioning" not in p and "rangepartitioning" not in p
+    assert "rangepartitioning" not in p
+    hashed = [ln for ln in p.splitlines() if "hashpartitioning" in ln]
+    assert all(
+        "hashpartitioning(doc_id#" in ln and "REPARTITION_BY_NUM" in ln
+        for ln in hashed
+    ), hashed
     assert p.count("Exchange") <= 2  # tree+details of the one spread
     assert "Join" not in p and "InPandas" not in p
 

@@ -418,9 +418,9 @@ def test_parquet_footer_stats_match_truth(spark, tmp_path):
 
 
 def test_spread_scan_adaptive_repartition(spark, tmp_path):
-    # Round-15 (guide §2.5): a single-row-group parquet file reads as
-    # ONE task, serializing any compute fused into the scan; the
-    # helper repairs that by round-robin repartitioning to the session
+    # Guide §2.5: a single-row-group parquet file reads as ONE task,
+    # serializing any compute fused into the scan; the helper repairs
+    # that by hash-repartitioning on the named key to the session
     # parallelism — and must be an IDENTITY when the scan can already
     # supply that many tasks (the at-scale path).
     from pyspark.sql import functions as F
@@ -434,9 +434,20 @@ def test_spread_scan_adaptive_repartition(spark, tmp_path):
     spark.range(10_000).coalesce(1).write.parquet(src)
     df = spark.read.parquet(src)
 
-    out = spread_scan(df)
-    # plan carries the round-robin exchange...
-    assert "RoundRobinPartitioning" in out._jdf.queryExecution().toString()
+    out = spread_scan(df, "id")
+    # plan carries a hash exchange on the given key, to the session's
+    # parallelism...
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(id#" in plan and "REPARTITION_BY_NUM" in plan
+    assert f", {par}), REPARTITION_BY_NUM" in plan
+    assert "RoundRobinPartitioning" not in plan
+    # ...every row lands in the same partition on a second run (what a
+    # retried task relies on; no pre-exchange sort needed)...
+    placed = out.select("id", F.spark_partition_id().alias("p"))
+    assert sorted(map(tuple, placed.collect())) == sorted(
+        map(tuple, placed.collect())
+    )
+    assert placed.select("p").distinct().count() > 1
     # ...and results are identical as a multiset
     base = df.groupBy((F.col("id") % 7).alias("k")).count()
     got = out.groupBy((F.col("id") % 7).alias("k")).count()
@@ -449,7 +460,10 @@ def test_spread_scan_adaptive_repartition(spark, tmp_path):
     many = str(tmp_path / "many_files")
     spark.range(10_000).repartition(par).write.parquet(many)
     df_many = spark.read.parquet(many)
-    assert spread_scan(df_many) is df_many
+    assert spread_scan(df_many, "id") is df_many
+    # a key is required: hashing all columns would defeat column pruning
+    with pytest.raises(ValueError):
+        spread_scan(df)
 
 
 def test_spread_scan_leaves_unsized_inputs_alone(spark, tmp_path, monkeypatch):
@@ -463,9 +477,56 @@ def test_spread_scan_leaves_unsized_inputs_alone(spark, tmp_path, monkeypatch):
     df = spark.read.parquet(src)
     local = df.inputFiles()
     monkeypatch.setattr(df, "inputFiles", lambda: ["s3://bucket/t/part-0.parquet"])
-    assert spread_scan(df) is df
+    assert spread_scan(df, "id") is df
     monkeypatch.setattr(df, "inputFiles", lambda: local + ["s3a://bucket/t/k"])
-    assert spread_scan(df) is df
+    assert spread_scan(df, "id") is df
+
+
+def _load_and_count_jobs(spark, sf_dir, name, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df = load_table(spark, sf_dir, name)
+    finally:
+        sc._jsc.clearJobGroup()  # noqa: SLF001
+    # job events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_pins_inferred_schema(spark, tmp_path):
+    # Parquet schema inference is a Spark job per read; load_table infers
+    # once per file version and pins the schema afterwards.
+    sf = str(tmp_path)
+    path = f"{sf}/t.parquet"
+    spark.range(100).selectExpr("id", "id * 2 AS v").coalesce(1).write.parquet(
+        path
+    )
+    first, jobs = _load_and_count_jobs(spark, sf, "t", "load-table-first")
+    assert jobs >= 1
+    again, jobs = _load_and_count_jobs(spark, sf, "t", "load-table-again")
+    assert jobs == 0
+    assert again.schema == first.schema
+    assert again.agg(F.sum("v")).first()[0] == 9900
+    # a fresh relation per call: two loads carry distinct attribute ids,
+    # so a self-join of them is well defined
+    def ids(df):
+        return df._jdf.queryExecution().analyzed().output().toString()
+
+    assert ids(again) != ids(first)
+    pairs = first.alias("a").join(
+        again.alias("b"), F.col("a.id") == F.col("b.v")
+    )
+    assert pairs.count() == 50
+
+    # rewriting the file makes the next load infer again
+    spark.range(10).selectExpr("id", "'x' AS w").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path)
+    rewritten, jobs = _load_and_count_jobs(spark, sf, "t", "load-table-new")
+    assert jobs >= 1
+    assert rewritten.columns == ["id", "w"]
+    assert rewritten.count() == 10
 
 
 def test_spread_scan_parses_byte_size_suffixes():
@@ -494,6 +555,6 @@ def test_spread_scan_honours_suffixed_max_partition_bytes(spark, tmp_path):
     old = spark.conf.get(key)
     spark.conf.set(key, "1g")
     try:
-        assert spread_scan(df) is not df
+        assert spread_scan(df, "id") is not df
     finally:
         spark.conf.set(key, old)
