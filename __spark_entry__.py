@@ -4,7 +4,8 @@
 PURCHASE_ORDERS_AND_INVOICES analog, BlueForty.py:220-233) on sf0.001.
 ``queries()`` declares one named query per implemented operator family
 from SURVEY.md §2 plus the LLM-pipeline extensions; ``oracle_sql()``
-supplies the DuckDB twin for each.
+supplies the DuckDB twin for each, found by name: ``_SQL_<NAME>`` or
+``_sql_<name>()`` next to the ``q_<name>`` builder.
 
 Cross-engine determinism rules used throughout (so the driver's
 row-count + schema + order-insensitive value-hash comparison is exact,
@@ -202,6 +203,11 @@ from blueforty___etl_data_pipeline_spark.sources.csv import (
     with_filename_partition,
 )
 from blueforty___etl_data_pipeline_spark.sources.xml import shred_xml_docs
+from blueforty___etl_data_pipeline_spark.streaming.drain import (
+    _await_streaming,
+    _scoped_stream_partitions,
+    drain_to_memory,
+)
 from blueforty___etl_data_pipeline_spark.streaming.joins import (
     stream_stream_join,
 )
@@ -274,7 +280,7 @@ def q_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("POAmount", F.col("POAmount").cast("double"))
 
 
-_SQL_PO_TOTALS = """
+_SQL_ORDER_TOTALS = """
 SELECT l_orderkey AS PurchaseOrderID,
        CAST(l_shipdate AS DATE) AS OrderDate,
        l_suppkey AS SupplierID,
@@ -365,7 +371,7 @@ def q_outer_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_OUTER_JOIN = """
+_SQL_OUTER_JOIN_AGG = """
 SELECT c_custkey, COUNT(o_orderkey) AS n_orders
 FROM customer LEFT JOIN orders ON c_custkey = o_custkey
 GROUP BY 1
@@ -392,7 +398,7 @@ def q_semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semi.unionByName(anti)
 
 
-_SQL_SEMI_ANTI = """
+_SQL_SEMI_ANTI_JOIN = """
 SELECT 'semi' AS op, c_custkey FROM customer
 WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 150000)
 UNION ALL
@@ -594,7 +600,7 @@ def q_top1_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TOP1 = """
+_SQL_TOP1_PER_GROUP = """
 SELECT l_orderkey, l_linenumber, l_extendedprice
 FROM (SELECT l_orderkey, l_linenumber, l_extendedprice,
              ROW_NUMBER() OVER (PARTITION BY l_orderkey
@@ -618,7 +624,7 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TOPK = """
+_SQL_TOPK_PER_GROUP = """
 SELECT l_orderkey, l_linenumber, l_extendedprice, rn
 FROM (SELECT l_orderkey, l_linenumber, l_extendedprice,
              CAST(ROW_NUMBER() OVER (PARTITION BY l_orderkey
@@ -648,7 +654,7 @@ def q_argmin_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_ARGMIN = """
+_SQL_ARGMIN_AGG = """
 SELECT l_orderkey, l_linenumber, l_extendedprice
 FROM (SELECT l_orderkey, l_linenumber, l_extendedprice,
              ROW_NUMBER() OVER (PARTITION BY l_orderkey
@@ -679,7 +685,7 @@ def q_composite_key_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_COMPOSITE_JOIN = """
+_SQL_COMPOSITE_KEY_JOIN = """
 WITH mx AS (SELECT l_orderkey AS k, MAX(l_shipdate) AS max_ship
             FROM lineitem GROUP BY 1)
 SELECT l.l_orderkey, l.l_linenumber, l.l_shipdate AS ship_ts
@@ -1548,7 +1554,7 @@ _SQL_HAVERSINE = (
     " * POWER(SIN(RADIANS(s.LONGITUDE - z.lon) / 2), 2)))"
 )
 
-_SQL_CLOSEST = f"""
+_SQL_CLOSEST_STATIONS = f"""
 WITH z AS ({_SQL_ZIPS}), s AS ({_SQL_STATIONS}),
 d AS (SELECT z.zip_code, s.NOAA_WEATHER_STATION_ID AS station_id,
              ROUND({_SQL_HAVERSINE}, 4) AS dist_km
@@ -1603,6 +1609,9 @@ def q_closest_stations_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     return closest_stations_grid(zips, stations, cell_deg=20.0, round_decimals=4)
 
 
+_SQL_CLOSEST_STATIONS_GRID = _SQL_CLOSEST_STATIONS
+
+
 # --- scalar cleaning battery (F1-F12) --------------------------------------
 
 def q_cleaning_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1650,7 +1659,7 @@ def q_cleaning_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_CLEANING = """
+_SQL_CLEANING_SCALARS = """
 WITH dirty AS (
   SELECT p_partkey,
          CASE WHEN p_partkey % 7 = 0 THEN NULL
@@ -1746,7 +1755,7 @@ def q_json_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select("event_id", parsed["k"].alias("k_value"))
 
 
-_SQL_JSON = """
+_SQL_JSON_FLATTEN = """
 SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_value
 FROM events
 """
@@ -1771,7 +1780,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "user_id", "asof_ts_us")
 
 
-_SQL_ASOF = """
+_SQL_ASOF_JOIN = """
 WITH clicks AS (SELECT user_id, ts, event_id FROM events
                 WHERE event_type = 'click'),
 purchases AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase')
@@ -2043,7 +2052,7 @@ def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TUMBLING = f"""
+_SQL_TUMBLING_WINDOW = f"""
 SELECT CAST(epoch_us(time_bucket(INTERVAL 1 HOUR, ts)) AS BIGINT)
          AS window_start_us,
        event_type, COUNT(*) AS n_events, {_VAL_MICROS} AS value_micros
@@ -2069,7 +2078,7 @@ def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SLIDING = """
+_SQL_SLIDING_WINDOW = """
 SELECT CAST(epoch_us(time_bucket(INTERVAL 30 MINUTE, ts)) AS BIGINT)
          - off AS window_start_us,
        event_type, COUNT(*) AS n_events
@@ -2105,7 +2114,7 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SESSION = f"""
+_SQL_SESSION_WINDOW = f"""
 WITH d AS (
   SELECT user_id, ts, value,
          CASE WHEN lag(ts) OVER w IS NULL
@@ -2126,137 +2135,9 @@ FROM s GROUP BY user_id, sid
 """
 
 
-def _await_streaming(q, timeout: int = 300) -> None:
-    """Block until an availableNow run finishes; a False return means
-    the memory sink would be read mid-run (a partial, inscrutable
-    oracle mismatch), so surface it as a hard timeout instead.
-
-    After a clean drain the query is stopped and the manager's
-    terminated-query list is cleared: StreamingQueryManager retains a
-    reference to EVERY terminated query for ``spark.streams.get()``,
-    so a 275-query bench session that exercises the streaming family
-    repeatedly accumulates dead query objects (and their progress
-    histories) in the driver for the life of the JVM — one of the
-    in-session fixed-cost growth vectors flagged in VERDICT r8 item 4."""
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {q.name!r} still running after {timeout}s"
-        )
-    q.stop()
-    active = None
-    try:
-        active = SparkSession.getActiveSession()
-        if active is not None:
-            active.streams.resetTerminated()
-            # Second in-session growth vector (VERDICT r9 item 6):
-            # terminated queries leave their HDFSBackedStateStoreProvider
-            # instances (and their in-heap loadedMaps) registered until
-            # the 60s maintenance tick notices the run id changed — a
-            # bench session draining ~30 stateful queries accumulates
-            # thousands of dead providers' heap before any unload.
-            # StateStore.stop() unloads them all and stops the
-            # maintenance task; the next streaming query restarts both
-            # lazily (probed: post-stop drains run green and fast).
-            # Only safe when no OTHER stream is mid-batch.
-            if not active.streams.active:
-                active._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    except Exception as exc:
-        # Cleanup must never fail a green drain — but the StateStore
-        # unload goes through a private JVM class path that a Spark
-        # upgrade could rename, silently reverting the heap-growth fix
-        # (ADVICE r10).  Log once per process so a broken path is
-        # noticed rather than swallowed.
-        global _STATESTORE_STOP_WARNED
-        if not _STATESTORE_STOP_WARNED:
-            _STATESTORE_STOP_WARNED = True
-            print(
-                "WARN _await_streaming: post-drain StateStore cleanup "
-                f"failed ({type(exc).__name__}: {exc}); dead state-store "
-                "providers will accumulate until the maintenance tick",
-                file=sys.stderr,
-            )
-
-
-_STATESTORE_STOP_WARNED = False
-
-
 #: parquet staging dirs already materialized by THIS process —
 #: see _stage_stream_source.
 _STAGED_STREAM_SOURCES: set[str] = set()
-
-
-def _stream_partitions_for(src: str, current: int, cores: int) -> int:
-    """Scale-adaptive shuffle/state partition count for a streaming
-    drain over the staged source at ``src``.
-
-    Structured Streaming pins its state-store partition count to
-    ``spark.sql.shuffle.partitions`` at first-batch planning and AQE
-    never re-coalesces stateful exchanges, so every stateful operator
-    pays per-batch load/commit cost on ALL ``N`` state partitions even
-    when the drained data would fit in one (guide §2.1/§2.2; VERDICT
-    r14 #2: the 32-partition default made the streaming family the
-    bench's largest fixed-overhead block).  Derive the count from the
-    staged input size — one partition per ~32 MB of data files, floored
-    at ``min(8, cores)``, capped at the session's configured
-    ``spark.sql.shuffle.partitions`` so a cluster submitter's sizing
-    still wins at scale.  The floor keeps one wave of state tasks:
-    each state partition is one task per batch that loads and commits
-    its own store, so partitions beyond the cores run as extra waves of
-    that fixed cost (streaming_user_stats at sf0.1 on 4 cores:
-    1.16-1.31 s at 4 partitions, 1.41-1.71 s at 8).  Above 8 cores the floor
-    stays 8; the 32-core run that set that cap predates the bucketed
-    user-stats state and has not been repeated.  Partitioning only
-    changes WHERE a key's state lives, never per-key results, so
-    emissions are identical.
-    """
-    if not os.path.isdir(src):
-        return current
-    # Data files as Spark's file index lists them: names starting with
-    # "_" or "." (_SUCCESS, _spark_metadata, .crc) are not data.
-    size = 0
-    try:
-        for root, dirs, files in os.walk(src):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            size += sum(
-                os.path.getsize(os.path.join(root, f))
-                for f in files
-                if not f.startswith(("_", "."))
-            )
-    except OSError:
-        return current
-    return min(current, max(min(8, cores), size // (32 << 20) + 1))
-
-
-class _scoped_stream_partitions:
-    """Set shuffle partitions for the duration of a streaming drain and
-    restore the session value afterwards (the conf is read at stream
-    start; queries run strictly sequentially in the bench/driver)."""
-
-    def __init__(self, spark: SparkSession, src: str) -> None:
-        self._spark = spark
-        self._src = src
-
-    def __enter__(self) -> None:
-        self._old = self._spark.conf.get("spark.sql.shuffle.partitions")
-        tgt = _stream_partitions_for(
-            self._src,
-            int(self._old),
-            self._spark.sparkContext.defaultParallelism,
-        )
-        self._spark.conf.set("spark.sql.shuffle.partitions", str(tgt))
-
-    def __exit__(self, *exc) -> None:
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._old)
-
-
-def _start_drained(writer, spark: SparkSession, src: str) -> None:
-    """Start an availableNow writer under the scale-adaptive partition
-    scope and block until the drain completes (the shared tail of
-    every streaming query in this module)."""
-    with _scoped_stream_partitions(spark, src):
-        q = writer.start()
-        _await_streaming(q)
 
 
 def _stage_stream_source(df: DataFrame, name: str, sf_dir: str) -> str:
@@ -2300,19 +2181,16 @@ def q_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=("event_type",),
         aggs=[F.count(F.lit(1)).alias("n_events")],
     )
-    _start_drained(
-        agg.writeStream.format("memory")
-        .queryName("q_streaming_sliding_sink")
-        .outputMode("complete")
-        .trigger(availableNow=True),
-        spark,
-        src,
-    )
-    return spark.table("q_streaming_sliding_sink").select(
+    return drain_to_memory(
+        spark, agg, "q_streaming_sliding_sink", "complete", src
+    ).select(
         F.unix_micros(F.col("window_start")).alias("window_start_us"),
         "event_type",
         "n_events",
     )
+
+
+_SQL_STREAMING_SLIDING = _SQL_SLIDING_WINDOW
 
 
 def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2344,20 +2222,17 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.floor(F.col("value") * 1000000)).alias("value_micros"),
         ],
     )
-    _start_drained(
-        agg.writeStream.format("memory")
-        .queryName("q_streaming_tumbling_sink")
-        .outputMode("complete")
-        .trigger(availableNow=True),
-        spark,
-        src,
-    )
-    return spark.table("q_streaming_tumbling_sink").select(
+    return drain_to_memory(
+        spark, agg, "q_streaming_tumbling_sink", "complete", src
+    ).select(
         F.unix_micros(F.col("window_start")).alias("window_start_us"),
         "event_type",
         "n_events",
         "value_micros",
     )
+
+
+_SQL_STREAMING_TUMBLING = _SQL_TUMBLING_WINDOW
 
 
 def q_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2383,21 +2258,18 @@ def q_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.floor(F.col("value") * 1000000)).alias("value_micros"),
         ],
     )
-    _start_drained(
-        agg.writeStream.format("memory")
-        .queryName("q_streaming_session_sink")
-        .outputMode("complete")
-        .trigger(availableNow=True),
-        spark,
-        src,
-    )
-    return spark.table("q_streaming_session_sink").select(
+    return drain_to_memory(
+        spark, agg, "q_streaming_session_sink", "complete", src
+    ).select(
         "user_id",
         F.unix_micros(F.col("session_start")).alias("session_start_us"),
         F.unix_micros(F.col("session_end")).alias("session_end_us"),
         "n_events",
         "value_micros",
     )
+
+
+_SQL_STREAMING_SESSION = _SQL_SESSION_WINDOW
 
 
 def q_streaming_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2417,21 +2289,12 @@ def q_streaming_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _stage_stream_source(ev, "events_stats", sf_dir)
     stream = spark.readStream.schema(ev.schema).parquet(src)
     out = running_user_stats_exact(stream)
-    _start_drained(
-        out.writeStream.format("memory")
-        .queryName("q_streaming_user_stats_sink")
-        .outputMode("update")
-        .trigger(availableNow=True),
-        spark,
-        src,
+    sink = drain_to_memory(
+        spark, out, "q_streaming_user_stats_sink", "update", src
     )
-    return (
-        spark.table("q_streaming_user_stats_sink")
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max("value_micros").alias("value_micros"),
-        )
+    return sink.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"),
+        F.max("value_micros").alias("value_micros"),
     )
 
 
@@ -2451,15 +2314,9 @@ def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _stage_stream_source(ev, "events_topk", sf_dir)
     stream = spark.readStream.schema(ev.schema).parquet(src)
     out = running_topk_events(stream)
-    _start_drained(
-        out.writeStream.format("memory")
-        .queryName("q_streaming_topk_sink")
-        .outputMode("update")
-        .trigger(availableNow=True),
-        spark,
-        src,
+    sink = drain_to_memory(
+        spark, out, "q_streaming_topk_sink", "update", src
     )
-    sink = spark.table("q_streaming_topk_sink")
     last = sink.groupBy(F.col("user_id").alias("uid")).agg(
         F.max("n_seen").alias("mx")
     )
@@ -2488,7 +2345,7 @@ FROM ranked WHERE rank <= 3
 """
 
 
-_SQL_STREAM_USER_STATS = """
+_SQL_STREAMING_USER_STATS = """
 SELECT user_id, COUNT(*) AS n_events,
        CAST(SUM(CAST(FLOOR(value * 1000000) AS BIGINT)) AS BIGINT)
          AS value_micros
@@ -2616,21 +2473,15 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _stage_stream_source(doubled, "events_dedup", sf_dir)
     stream = spark.readStream.schema(ev.schema).parquet(src)
     out = streaming_dedup(stream, ("event_id",), watermark="3650 days")
-    _start_drained(
-        out.select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.unix_micros(F.col("ts")).alias("ts_us"),
-        )
-        .writeStream.format("memory")
-        .queryName("q_streaming_dedup_sink")
-        .outputMode("append")
-        .trigger(availableNow=True),
-        spark,
-        src,
+    out = out.select(
+        "event_id",
+        "user_id",
+        "event_type",
+        F.unix_micros(F.col("ts")).alias("ts_us"),
     )
-    return spark.table("q_streaming_dedup_sink")
+    return drain_to_memory(
+        spark, out, "q_streaming_dedup_sink", "append", src
+    )
 
 
 _SQL_STREAMING_DEDUP = """
@@ -2662,16 +2513,10 @@ def q_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_stopword_ratio=0.01,
     ).withColumn("ts", F.current_timestamp())
     deduped = streaming_dedup(gated, ("doc_id",), watermark="3650 days")
-    _start_drained(
-        deduped.select("doc_id", "lang", "source", "n_chars")
-        .writeStream.format("memory")
-        .queryName("q_streaming_ingest_sink")
-        .outputMode("append")
-        .trigger(availableNow=True),
-        spark,
-        src,
+    out = deduped.select("doc_id", "lang", "source", "n_chars")
+    return drain_to_memory(
+        spark, out, "q_streaming_ingest_sink", "append", src
     )
-    return spark.table("q_streaming_ingest_sink")
 
 
 def q_action_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2971,15 +2816,9 @@ def q_streaming_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("ts")).alias("view_ts_us"),
         F.unix_micros(F.col("ts_r")).alias("click_ts_us"),
     )
-    _start_drained(
-        out.writeStream.format("memory")
-        .queryName("q_streaming_join_sink")
-        .outputMode("append")
-        .trigger(availableNow=True),
-        spark,
-        src,
+    return drain_to_memory(
+        spark, out, "q_streaming_join_sink", "append", src
     )
-    return spark.table("q_streaming_join_sink")
 
 
 _SQL_STREAMING_JOIN = """
@@ -3060,7 +2899,7 @@ FROM red
 """, rows
 
 
-def _sql_minhash_sigs_exploded() -> str:
+def _sql_minhash_signatures() -> str:
     """Scalar (doc_id, pos, h) form of the signature oracle — the driver's
     canonicalizer cannot hash list columns, so the correctness query
     explodes the signature on both engines."""
@@ -3109,7 +2948,7 @@ def q_minhash_lsh_pairs_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_lsh_pairs() -> str:
+def _sql_minhash_lsh_pairs() -> str:
     sig_sql, rows = _sql_minhash_sigs()
     return f"""
 WITH sigs AS ({sig_sql}),
@@ -3124,6 +2963,9 @@ SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
 FROM banded l JOIN banded r
   ON l.band = r.band AND l.bucket = r.bucket AND l.doc_id < r.doc_id
 """
+
+
+_sql_minhash_lsh_pairs_expr = _sql_minhash_lsh_pairs
 
 
 def q_lsh_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3145,7 +2987,7 @@ def q_lsh_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "lang", "source", "n_chars")
 
 
-def _sql_lsh_incremental() -> str:
+def _sql_lsh_dedup_incremental() -> str:
     sig_sql, rows = _sql_minhash_sigs()
     return f"""
 WITH sigs AS ({sig_sql}),
@@ -3188,7 +3030,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_JACCARD = f"""
+_SQL_NGRAM_JACCARD_PAIRS = f"""
 WITH {_D_SH_CTE}, shx AS (
   SELECT doc_id, unnest(shs) AS h FROM sh
 ), sizes AS (
@@ -3406,7 +3248,7 @@ def q_exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dup_groups(_t(spark, sf_dir, "documents"))
 
 
-_SQL_EXACT_DUP = """
+_SQL_EXACT_DUP_GROUPS = """
 SELECT md5(text) AS content_hash, MIN(doc_id) AS canonical_id,
        COUNT(*) AS dup_count
 FROM documents GROUP BY 1
@@ -3462,6 +3304,9 @@ FROM documents d LEFT JOIN bits USING (doc_id)
 """
 
 
+_sql_simhash_expr = _sql_simhash
+
+
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: band-bucket blocking (pigeonhole: ≤3-bit
     differences must agree on one of 4 bands) + exact Hamming filter."""
@@ -3508,7 +3353,7 @@ def _sql_components_cte() -> str:
     """Recursive min-reachable-label: the DuckDB twin of the iterative
     Spark propagation (both compute min(node id) per component)."""
     return f"""
-pairs AS MATERIALIZED ({_sql_lsh_pairs()}),
+pairs AS MATERIALIZED ({_sql_minhash_lsh_pairs()}),
 edges AS MATERIALIZED (
   SELECT id_a AS u, id_b AS v FROM pairs
   UNION
@@ -3819,7 +3664,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tfidf_top_terms(_t(spark, sf_dir, "documents"), k=3)
 
 
-def _sql_tfidf(k: int = 3) -> str:
+def _sql_tfidf_top_terms(k: int = 3) -> str:
     toks = _D_TOKENS.format(t="text")
     return f"""
 WITH tok AS (
@@ -4044,7 +3889,7 @@ def q_normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_NORMALIZE = """
+_SQL_NORMALIZE_TEXT = """
 SELECT doc_id,
        trim(regexp_replace(
          regexp_replace(lower(text), '[^a-zA-Z0-9 \\t\\n\\x0b\\f\\r]', ' ', 'g'),
@@ -4198,6 +4043,9 @@ WHERE len(toks) >= 20
 """
 
 
+_SQL_STREAMING_INGEST = _SQL_QUALITY_FILTER
+
+
 def q_assign_packs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing: cumulative-token segmentation into ~2048-token
     packs over doc_id order."""
@@ -4229,6 +4077,9 @@ def q_assign_packs_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assign_packs_scalable(
         _t(spark, sf_dir, "documents"), budget=2048, chunk_size=100
     )
+
+
+_SQL_ASSIGN_PACKS_SCALABLE = _SQL_ASSIGN_PACKS
 
 
 def q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4276,7 +4127,7 @@ def q_ann_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_brute_force(emb, queries, k=5, round_decimals=6)
 
 
-_SQL_ANN_BRUTE = f"""
+_SQL_ANN_BRUTE_FORCE = f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
            WHERE vec_id % 100 = 0),
 scored AS (
@@ -4427,7 +4278,7 @@ FROM truth t LEFT JOIN (
 
     return f"""
 WITH truth AS (
-  SELECT query_id, neighbor_id FROM ({_SQL_ANN_BRUTE.replace("rn <= 5", "rn <= 2")})
+  SELECT query_id, neighbor_id FROM ({_SQL_ANN_BRUTE_FORCE.replace("rn <= 5", "rn <= 2")})
   WHERE query_id != neighbor_id)
 {ranked(_sql_ann_lsh().replace("rn <= 5", "rn <= 6"), "lsh")}
 UNION ALL
@@ -4559,7 +4410,7 @@ FROM (
     return f"""
 WITH ex AS (
   SELECT query_id, neighbor_id, score
-  FROM ({_SQL_ANN_BRUTE.replace("rn <= 5", "rn <= 4")})
+  FROM ({_SQL_ANN_BRUTE_FORCE.replace("rn <= 5", "rn <= 4")})
   WHERE query_id != neighbor_id),
 truth0 AS (
   SELECT query_id, neighbor_id,
@@ -4823,7 +4674,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_ann_recall() -> str:
     return f"""
-WITH exact AS (SELECT query_id, neighbor_id FROM ({_SQL_ANN_BRUTE})),
+WITH exact AS (SELECT query_id, neighbor_id FROM ({_SQL_ANN_BRUTE_FORCE})),
 l AS (SELECT query_id, neighbor_id FROM ({_sql_ann_lsh()})),
 v AS (SELECT query_id, neighbor_id FROM ({_sql_ann_ivf()})),
 tot AS (SELECT COUNT(*) AS n_exact FROM exact),
@@ -4859,6 +4710,9 @@ def q_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_ivf_index(emb, path, centroid_stride=50)
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     return probe_ivf_index(spark, path, queries, k=5, nprobe=2)
+
+
+_sql_ann_ivf_indexed = _sql_ann_ivf
 
 
 def q_ann_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4915,9 +4769,9 @@ WITH kw AS (
   SELECT CAST(0 AS BIGINT) AS query_id, doc_id AS neighbor_id,
          CAST(ROW_NUMBER() OVER (ORDER BY score_fp DESC, doc_id)
               AS INTEGER) AS rank
-  FROM ({_SQL_BM25})),
+  FROM ({_SQL_BM25_SEARCH})),
 dn AS (
-  SELECT query_id, neighbor_id, rank FROM ({_SQL_ANN_BRUTE})
+  SELECT query_id, neighbor_id, rank FROM ({_SQL_ANN_BRUTE_FORCE})
   WHERE query_id = 0),
 u AS (SELECT * FROM kw UNION ALL SELECT * FROM dn),
 s AS (
@@ -4981,7 +4835,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.select("doc_id", "n_bytes", "content_md5")
 
 
-_SQL_MULTIMODAL = """
+_SQL_MULTIMODAL_FEATURES = """
 SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
        md5(text) AS content_md5
 FROM documents
@@ -6056,7 +5910,7 @@ def q_filename_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_filename_partition(df).select("id", "yyyy", "mm")
 
 
-_SQL_FNAME_PARTITION = """
+_SQL_FILENAME_PARTITION = """
 SELECT r_regionkey AS id, yyyy, mm
 FROM region CROSS JOIN (VALUES ('2024', '03'), ('2024', '11'),
                                ('misc', '00')) t(yyyy, mm)
@@ -6088,7 +5942,7 @@ def q_ctas_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_CTAS = """
+_SQL_CTAS_ROUNDTRIP = """
 SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS yr,
        o_orderpriority AS priority, COUNT(*) AS n_orders
 FROM orders GROUP BY 1, 2
@@ -6178,7 +6032,7 @@ def q_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_DRIFT = """
+_SQL_DISTRIBUTION_DRIFT = """
 WITH a AS (
   SELECT CAST(FLOOR(value / 8.0) AS BIGINT) AS bin, COUNT(*) AS n_a
   FROM events WHERE event_type = 'click' GROUP BY 1),
@@ -6320,8 +6174,8 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_lsh_recall() -> str:
     return f"""
-WITH truth AS (SELECT id_a, id_b FROM ({_SQL_JACCARD})),
-cand AS (SELECT id_a, id_b FROM ({_sql_lsh_pairs()})),
+WITH truth AS (SELECT id_a, id_b FROM ({_SQL_NGRAM_JACCARD_PAIRS})),
+cand AS (SELECT id_a, id_b FROM ({_sql_minhash_lsh_pairs()})),
 hit AS (SELECT * FROM truth INTERSECT SELECT * FROM cand),
 c AS (SELECT (SELECT COUNT(*) FROM truth) AS n_truth,
              (SELECT COUNT(*) FROM cand) AS n_candidates,
@@ -6452,7 +6306,7 @@ def _d_zterms() -> str:
     return " + ".join(parts)
 
 
-_SQL_ZORDER = f"""
+_SQL_ZORDER_KEY = f"""
 WITH k AS (
   SELECT c_custkey,
          CAST(c_custkey % 4096 AS BIGINT) AS x,
@@ -6617,7 +6471,7 @@ def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "lang", "source", "n_chars")
 
 
-_SQL_COMPACT = """
+_SQL_COMPACT_ROUNDTRIP = """
 SELECT doc_id, lang, source, n_chars FROM documents
 """
 
@@ -6653,7 +6507,7 @@ def q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_VARIANT = """
+_SQL_VARIANT_EXTRACT = """
 WITH j AS (
   SELECT '{"meta":{"type":"' || event_type || '","uid":'
          || CAST(user_id AS VARCHAR) || '},"payload":' || props || '}'
@@ -6806,7 +6660,7 @@ FROM b
 """
 
 
-_SQL_INTERFACE_TEXT = """
+_SQL_SQL_INTERFACE = """
 SELECT l_returnflag, l_linestatus,
        CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
        CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
@@ -6831,7 +6685,7 @@ def q_sql_interface(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_testdata(spark, sf_dir, tables=("lineitem",))
-    return spark.sql(_SQL_INTERFACE_TEXT)
+    return spark.sql(_SQL_SQL_INTERFACE)
 
 
 def q_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6909,7 +6763,7 @@ def q_cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_CUBE = """
+_SQL_CUBE_AGG = """
 SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows,
        CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DOUBLE)
          AS sum_qty
@@ -7185,7 +7039,7 @@ def _d_profile_col(c: str, kind: str) -> str:
     )
 
 
-_SQL_PROFILE = " UNION ALL ".join(
+_SQL_PROFILE_TABLE = " UNION ALL ".join(
     _d_profile_col(c, k)
     for c, k in [
         ("o_orderkey", "int"),
@@ -7799,7 +7653,7 @@ def q_constraint_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_CONSTRAINTS = """
+_SQL_CONSTRAINT_VIOLATIONS = """
 SELECT 'not_null:o_custkey' AS rule,
        CAST(COALESCE(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT)
          AS n_violations FROM orders
@@ -7866,7 +7720,7 @@ def q_having_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_HAVING = """
+_SQL_HAVING_FILTER = """
 SELECT o_custkey, c_name, n_orders,
        CAST(spend AS DOUBLE) AS total_spend
 FROM (
@@ -7895,7 +7749,7 @@ def q_count_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_COUNT_DISTINCT = """
+_SQL_COUNT_DISTINCT_AGG = """
 SELECT p_brand, COUNT(DISTINCT l_suppkey) AS n_suppliers,
        COUNT(*) AS n_lineitems
 FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -7961,7 +7815,7 @@ def q_below_avg_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_BELOW_AVG = """
+_SQL_BELOW_AVG_FILTER = """
 WITH per_part AS (
   SELECT l_partkey AS pk, SUM(CAST(l_quantity AS DECIMAL(18,4))) AS sum_qty,
          COUNT(*) AS cnt
@@ -8037,7 +7891,7 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SCD2 = """
+_SQL_SCD2_HISTORY = """
 WITH src AS (
   SELECT user_id, ts, event_id, event_type FROM events
   WHERE user_id % 50 = 0
@@ -8143,7 +7997,7 @@ def q_range_frame_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_RANGE_FRAME = """
+_SQL_RANGE_FRAME_WINDOW = """
 SELECT event_id, event_type, CAST(epoch_us(ts) AS BIGINT) AS ts_us,
        COUNT(*) OVER (PARTITION BY event_type ORDER BY epoch_us(ts)
                       RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
@@ -8202,9 +8056,6 @@ r{k} AS (
     )
 
 
-_SQL_PAGERANK = _sql_pagerank()
-
-
 def q_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS (TPC-H Q4 shape): count orders per priority
     that have at least one deep-discount line.  Spark plan: the EXISTS
@@ -8224,7 +8075,7 @@ def q_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_EXISTS = """
+_SQL_EXISTS_SUBQUERY = """
 SELECT o_orderpriority, COUNT(*) AS order_count
 FROM orders o
 WHERE EXISTS (SELECT 1 FROM lineitem l
@@ -8270,7 +8121,7 @@ def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SCALAR_SUBQ = """
+_SQL_SCALAR_SUBQUERY = """
 WITH pos AS (
   SELECT c_custkey, c_nationkey,
          CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS cents
@@ -8370,7 +8221,7 @@ def q_ntile_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_NTILE = """
+_SQL_NTILE_WINDOWS = """
 WITH base AS (
   SELECT c_custkey, c_mktsegment,
          CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS cents
@@ -8403,7 +8254,7 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assign_nearest_centroid(emb, cents, round_decimals=6)
 
 
-_SQL_KMEANS = f"""
+_SQL_KMEANS_ASSIGN = f"""
 WITH k AS (SELECT vec_id AS centroid_id, embedding AS kv
            FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 2000),
 scored AS (
@@ -8428,7 +8279,7 @@ def q_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fuzzy_key_pairs(s, key_col="s_name", id_col="s_suppkey")
 
 
-_SQL_FUZZY = """
+_SQL_FUZZY_JOIN = """
 SELECT a.s_suppkey AS id_a, b.s_suppkey AS id_b,
        a.s_name AS key_a, b.s_name AS key_b,
        CAST(levenshtein(a.s_name, b.s_name) AS INTEGER) AS dist
@@ -8444,7 +8295,7 @@ def q_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quantize_embeddings(_t(spark, sf_dir, "embeddings"))
 
 
-_SQL_QUANTIZE = """
+_SQL_QUANTIZE_EMBEDDINGS = """
 WITH v AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
   FROM embeddings),
@@ -9567,6 +9418,9 @@ WHERE a.doc_id IS NULL OR b.doc_id IS NULL OR a.h != b.h
 """
 
 
+_sql_versioned_roundtrip = _sql_row_diff
+
+
 def q_pareto_front(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D Pareto front (operators/analytics.pareto_front_2d): parts
     not dominated under (minimize retail price, maximize size) — the
@@ -9962,7 +9816,7 @@ def q_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_signals(rebuilt)
 
 
-_SQL_REPETITION = """
+_SQL_REPETITION_SIGNALS = """
 WITH toks AS (
   SELECT doc_id, generate_subscripts(l, 1) AS tpos, unnest(l) AS tok
   FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)),
@@ -10087,7 +9941,7 @@ def q_build_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     return build_vocab(_t(spark, sf_dir, "documents"), min_count=2)
 
 
-_SQL_VOCAB = """
+_SQL_BUILD_VOCAB = """
 WITH t AS (SELECT unnest(regexp_split_to_array(trim(text), '[ \\t\\n\\x0b\\f\\r]+')) AS token FROM documents),
 c AS (SELECT token, COUNT(*) AS cnt FROM t WHERE token <> '' GROUP BY 1
       HAVING COUNT(*) >= 2)
@@ -10109,7 +9963,7 @@ def q_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_JACCARD_PREFIX = """
+_SQL_JACCARD_PREFIX_JOIN = """
 WITH t AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '[ \\t\\n\\x0b\\f\\r]+')) AS token
            FROM documents),
 tok AS (SELECT DISTINCT doc_id, token FROM t WHERE token <> ''),
@@ -10360,7 +10214,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_BM25 = """
+_SQL_BM25_SEARCH = """
 WITH t AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '[ \\t\\n\\x0b\\f\\r]+')) AS token
            FROM documents),
 tt AS (SELECT doc_id, token FROM t WHERE token <> ''),
@@ -10542,7 +10396,7 @@ JOIN (SELECT cid, COUNT(*) AS n_members FROM a3 GROUP BY 1) m
 """
 
 
-_SQL_COHORT = """
+_SQL_COHORT_RETENTION = """
 WITH wk AS (
   SELECT user_id AS u,
          CAST(FLOOR(date_diff('day', DATE '1970-01-01',
@@ -14687,7 +14541,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_split_leakage() -> str:
     return f"""
-WITH pairs AS (SELECT id_a, id_b FROM ({_sql_lsh_pairs()})),
+WITH pairs AS (SELECT id_a, id_b FROM ({_sql_minhash_lsh_pairs()})),
 sp AS (
   SELECT doc_id,
          CASE WHEN b < 8000 THEN 'train'
@@ -18919,15 +18773,9 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value_micros"
         ),
     )
-    _start_drained(
-        agg.writeStream.format("memory")
-        .queryName("q_streaming_enrich_sink")
-        .outputMode("complete")
-        .trigger(availableNow=True),
-        spark,
-        src,
+    return drain_to_memory(
+        spark, agg, "q_streaming_enrich_sink", "complete", src
     )
-    return spark.table("q_streaming_enrich_sink")
 
 
 _SQL_STREAMING_ENRICH = """
@@ -20182,15 +20030,9 @@ def q_streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("ts")).alias("view_ts_us"),
         F.unix_micros(F.col("ts_r")).alias("click_ts_us"),
     )
-    _start_drained(
-        out.writeStream.format("memory")
-        .queryName("q_streaming_outer_join_sink")
-        .outputMode("append")
-        .trigger(availableNow=True),
-        spark,
-        src,
+    return drain_to_memory(
+        spark, out, "q_streaming_outer_join_sink", "append", src
     )
-    return spark.table("q_streaming_outer_join_sink")
 
 
 _SQL_STREAMING_OUTER_JOIN = """
@@ -20633,18 +20475,12 @@ def q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    _start_drained(
-        streaming_ewma(stream)
-        .writeStream.format("memory")
-        .queryName("q_streaming_ewma_sink")
-        .outputMode("update")
-        .trigger(availableNow=True),
-        spark,
-        src,
-    )
-    return spark.table("q_streaming_ewma_sink").select(
-        "event_type", "hr", "n", "ewma"
-    )
+    return drain_to_memory(
+        spark, streaming_ewma(stream), "q_streaming_ewma_sink", "update", src
+    ).select("event_type", "hr", "n", "ewma")
+
+
+_SQL_STREAMING_EWMA = _SQL_EWMA_SMOOTH
 
 
 def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -20822,423 +20658,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "order_totals": _SQL_PO_TOTALS,
-        # -- round-9 additions --------------------------------------------
-        "ngram_novelty": _SQL_NGRAM_NOVELTY,
-        "dsir_importance": _sql_dsir_importance(),
-        "t_closeness": _SQL_T_CLOSENESS,
-        "audio_frames_real": _SQL_AUDIO_FRAMES_REAL,
-        "image_histogram_real": _SQL_IMAGE_HISTOGRAM_REAL,
-        "zip_roundtrip": _SQL_ZIP_ROUNDTRIP,
-        "mase_eval": _SQL_MASE_EVAL,
-        "bloom_semi_join": _sql_bloom_semi_join(),
-        "group_kfold": _sql_group_kfold(),
-        "lateness_profile": _SQL_LATENESS_PROFILE,
-        "cross_source_dups": _SQL_CROSS_SOURCE_DUPS,
-        "kmv_overlap": _sql_kmv_overlap(),
-        "ngram_search": _SQL_NGRAM_SEARCH,
-        "latex_strip": _SQL_LATEX_STRIP,
-        "bitext_mine": _sql_bitext_mine(),
-        "stl_decompose": _SQL_STL_DECOMPOSE,
-        "kcenter_coreset": _sql_kcenter_coreset(),
-        "bpe_fertility": _sql_bpe_fertility(),
-        "blocking_eval": _SQL_BLOCKING_EVAL,
-        "streaming_enrich": _SQL_STREAMING_ENRICH,
-        "streaming_upsert": _SQL_STREAMING_UPSERT,
-        "image_patches_real": _SQL_IMAGE_PATCHES_REAL,
-        "audio_resample_real": _SQL_AUDIO_RESAMPLE_REAL,
-        "rfm_segments": _SQL_RFM_SEGMENTS,
-        # round-10 session additions
-        "global_rank": _SQL_GLOBAL_RANK,
-        "fim_transform": _sql_fim_transform(),
-        "streaming_outer_join": _SQL_STREAMING_OUTER_JOIN,
-        "winnow_fingerprints": _sql_winnow_fingerprints(),
-        "isotonic_calibration": _SQL_ISOTONIC_CALIBRATION,
-        "rendezvous_shards": _sql_rendezvous_shards(),
-        "aiff_meta_real": _SQL_AIFF_META_REAL,
-        "pcap_extract": _SQL_PCAP_EXTRACT,
-        "tfrecord_roundtrip": _SQL_TFRECORD_ROUNDTRIP,
-        "ulid_generate": _sql_ulid_generate(),
-        "shuffle_quality": _sql_shuffle_quality(),
-        "randomized_response": _sql_randomized_response(),
-        "cdc_chunks": _sql_cdc_chunks(),
-        "facility_location": _sql_facility_location(),
-        "quantile_normalize": _SQL_QUANTILE_NORMALIZE,
-        "skyline": _SQL_SKYLINE,
-        "label_propagation": _sql_label_propagation(),
-        "bfs_hops": _sql_bfs_hops(),
-        "gaps_islands": _SQL_GAPS_ISLANDS,
-        "woe_encoding": _SQL_WOE_ENCODING,
-        "lof_outliers": _SQL_LOF_OUTLIERS,
-        "mutual_info": _SQL_MUTUAL_INFO,
-        "weighted_topk_sample": _SQL_WEIGHTED_TOPK_SAMPLE,
-        "fs_weights": _SQL_FS_WEIGHTS,
-        "pca_project": _SQL_PCA_PROJECT,
-        "grouped_mode": _SQL_GROUPED_MODE,
-        "rake_keywords": _sql_rake_keywords(),
-        "sequence_gaps": _SQL_SEQUENCE_GAPS,
-        "allen_relations": _SQL_ALLEN_RELATIONS,
-        "skipgram_pairs": _sql_skipgram_pairs(),
-        "fd_check": _SQL_FD_CHECK,
-        "streaming_topk": _SQL_STREAMING_TOPK,
-        "good_turing": _sql_good_turing(),
-        "ips_eval": _SQL_IPS_EVAL,
-        "zipf_fit": _sql_zipf_fit(),
-        "nelson_aalen": _SQL_NELSON_AALEN,
-        "term_burstiness": _sql_term_burstiness(),
-        "transition_entropy": _SQL_TRANSITION_ENTROPY,
-        "centroid_novelty": _SQL_CENTROID_NOVELTY,
-        "cuped_eval": _SQL_CUPED_EVAL,
-        # -- round-12 additions -------------------------------------------
-        "hits_scores": _sql_hits_scores(),
-        "graph_assortativity": _SQL_GRAPH_ASSORTATIVITY,
-        "herfindahl_index": _SQL_HERFINDAHL_INDEX,
-        "ewma_smooth": _SQL_EWMA_SMOOTH,
-        "clustering_coeff": _SQL_CLUSTERING_COEFF,
-        "adamic_adar": _SQL_ADAMIC_ADAR,
-        "prop_ztest": _SQL_PROP_ZTEST,
-        # shared with the batch twin: a hash match proves the streaming
-        # state fold equals the batch recurrence exactly
-        "streaming_ewma": _SQL_EWMA_SMOOTH,
-        "oov_rate": _SQL_OOV_RATE,
-        "anova_f": _SQL_ANOVA_F,
-        "cross_correlation": _SQL_CROSS_CORRELATION,
-        "sax_symbols": _SQL_SAX_SYMBOLS,
-        "sorted_neighborhood": _SQL_SORTED_NEIGHBORHOOD,
-        "maxsim_retrieval": _sql_maxsim_retrieval(),
-        "resample_interp": _SQL_RESAMPLE_INTERP,
-        "fair_interleave": _SQL_FAIR_INTERLEAVE,
-        # -- round-6 additions --------------------------------------------
-        "observed_write": _SQL_OBSERVED_WRITE,
-        "schema_drift": _SQL_SCHEMA_DRIFT,
-        "clustered_write": _SQL_CLUSTERED_WRITE,
-        "triangle_count": _SQL_TRIANGLE_COUNT,
-        "l_diversity": _SQL_L_DIVERSITY,
-        "corr_matrix": _sql_corr_matrix(),
-        "cusum_shift": _SQL_CUSUM_SHIFT,
-        "hll_distinct": _SQL_HLL_DISTINCT,
-        "url_extract": _SQL_URL_EXTRACT,
-        "jpeg_progressive_real": _sql_jpeg_progressive_real(),
-        "gif_frames_real": _sql_gif_frames_real(),
-        "flac_decode_real": _sql_flac_decode_real(),
-        "ab_test": _SQL_AB_TEST,
-        "split_leakage": _sql_split_leakage(),
-        "video_frames_real": _sql_video_frames_real(),
-        "mp4_frames_real": _sql_mp4_frames_real(),
-        "url_dedup": _SQL_URL_DEDUP,
-        "m4a_meta_real": _sql_m4a_meta_real(),
-        "vtt_parse_real": _sql_vtt_parse_real(),
-        "mkv_frames_real": _sql_mkv_frames_real(),
-        "ogg_meta_real": _sql_ogg_meta_real(),
-        "robots_audit": _SQL_ROBOTS_AUDIT,
-        "webdataset_roundtrip": _SQL_WEBDATASET_ROUNDTRIP,
-        "id3_tags_real": _SQL_ID3_TAGS_REAL,
-        "charset_sniff": _SQL_CHARSET_SNIFF,
-        "docx_extract": _SQL_DOCX_EXTRACT,
-        "warc_gz_roundtrip": _SQL_WARC_GZ_ROUNDTRIP,
-        "embargo_split": _SQL_EMBARGO_SPLIT,
-        "ip_anonymize": _SQL_IP_ANONYMIZE,
-        "join_skew": _SQL_JOIN_SKEW,
-        "matryoshka_eval": _sql_matryoshka_eval(),
-        "lag_features": _SQL_LAG_FEATURES,
-        "warc_http_roundtrip": _SQL_WARC_HTTP_ROUNDTRIP,
-        "sqlite_roundtrip": _SQL_SQLITE_ROUNDTRIP,
-        "pdf_extract": _SQL_PDF_EXTRACT,
-        "arrow_ipc_roundtrip": _SQL_ARROW_IPC_ROUNDTRIP,
-        "mbox_extract": _SQL_MBOX_EXTRACT,
-        "kaplan_meier": _SQL_KAPLAN_MEIER,
-        "webp_meta_real": _sql_webp_meta_real(),
-        "heaps_law": _SQL_HEAPS_LAW,
-        "xz_jsonl_roundtrip": _SQL_XZ_JSONL_ROUNDTRIP,
-        "media_pipeline": _sql_media_pipeline(),
-        "wap_publish": _SQL_WAP_PUBLISH,
-        "jpeg_color_real": _sql_jpeg_color_real(),
-        "png_color_real": _sql_png_color_real(),
-        "cluster_eval": _SQL_CLUSTER_EVAL,
-        "zstd_roundtrip": _SQL_ZSTD_ROUNDTRIP,
-        "g711_decode_real": _sql_g711_decode_real(),
-        "raster_decode_real": _sql_raster_decode_real(),
-        "tiff_decode_real": _sql_tiff_decode_real(),
-        "adpcm_decode_real": _sql_adpcm_decode_real(),
-        "cms_frequency": _SQL_CMS_FREQUENCY,
-        "kmv_distinct": _SQL_KMV_DISTINCT,
-        "geohash_tiles": _sql_geohash_tiles(),
-        "acf_daily": _SQL_ACF_DAILY,
-        "midi_decode_real": _sql_midi_decode_real(),
-        "theil_sen": _SQL_THEIL_SEN,
-        "webdataset_export": _SQL_WEBDATASET_EXPORT,
-        "unicode_normalize": _SQL_UNICODE_NORMALIZE,
-        "jackknife_se": _SQL_JACKKNIFE_SE,
-        "cohens_kappa": _SQL_COHENS_KAPPA,
-        "hashed_features": _SQL_HASHED_FEATURES,
-        "permutation_test": _SQL_PERMUTATION_TEST,
-        "markdown_strip": _SQL_MARKDOWN_STRIP,
-        "approx_quantile_contract": _SQL_APPROX_QUANTILE_CONTRACT,
-        "k_core": _sql_k_core(),
-        "chi2_independence": _SQL_CHI2_INDEPENDENCE,
-        "luhn_mask": _sql_luhn_mask(),
-        "k_anonymize": _SQL_K_ANONYMIZE,
-        "spearman": _SQL_SPEARMAN,
-        "mann_whitney": _SQL_MANN_WHITNEY,
-        "ks_test": _SQL_KS_TEST,
-        "target_encode": _SQL_TARGET_ENCODE,
-        "hilbert_key": _sql_hilbert_key(),
-        "mp3_meta_real": _sql_mp3_meta_real(),
-        "bmp_decode_real": _sql_bmp_decode_real(),
-        "exif_extract_real": _sql_exif_extract_real(),
-        "warc_roundtrip": _SQL_WARC_ROUNDTRIP,
-        "ols_regression": _SQL_OLS_REGRESSION,
-        "link_prediction": _SQL_LINK_PREDICTION,
-        "kendall_tau": _SQL_KENDALL_TAU,
-        "gini_gain": _SQL_GINI_GAIN,
-        "calibration": _SQL_CALIBRATION,
-        "bootstrap_ci": _sql_bootstrap_ci(),
-        "readability": _SQL_READABILITY,
-        "srt_parse_real": _sql_srt_parse_real(),
-        "image_phash": _sql_image_phash(),
-        "naive_bayes": _SQL_NAIVE_BAYES,
-        "density_clusters": _SQL_DENSITY_CLUSTERS,
-        "holt_forecast": _SQL_HOLT_FORECAST,
-        "xlsx_roundtrip": _SQL_XLSX_ROUNDTRIP,
-        "domain_rollup": _SQL_DOMAIN_ROLLUP,
-        "avro_roundtrip": _SQL_AVRO_ROUNDTRIP,
-        "fixed_width_roundtrip": _SQL_FIXED_WIDTH_ROUNDTRIP,
-        "parquet_stats": _SQL_PARQUET_STATS,
-        "point_in_polygon": _sql_point_in_polygon(),
-        "merge_intervals": _SQL_MERGE_INTERVALS,
-        "schema_evolution": _SQL_SCHEMA_EVOLUTION,
-        "mahalanobis": _SQL_MAHALANOBIS,
-        "golden_record": _SQL_GOLDEN_RECORD,
-        "media_sniff": _SQL_MEDIA_SNIFF,
-        "reconciliation": _SQL_RECONCILIATION,
-        "pricing_summary": _SQL_PRICING_SUMMARY,
-        "shipping_priority": _SQL_SHIPPING_PRIORITY,
-        "local_supplier_volume": _SQL_LOCAL_SUPPLIER_VOLUME,
-        "outer_join_agg": _SQL_OUTER_JOIN,
-        "semi_anti_join": _SQL_SEMI_ANTI,
-        "set_ops": _SQL_SET_OPS,
-        "rollup": _SQL_ROLLUP,
-        "window_analytics": _SQL_WINDOW_ANALYTICS,
-        "pivot": _SQL_PIVOT,
-        "unpivot": _SQL_UNPIVOT,
-        "distinct": _SQL_DISTINCT,
-        "top1_per_group": _SQL_TOP1,
-        "topk_per_group": _SQL_TOPK,
-        "argmin_agg": _SQL_ARGMIN,
-        "composite_key_join": _SQL_COMPOSITE_JOIN,
-        "closest_stations": _SQL_CLOSEST,
-        "closest_stations_grid": _SQL_CLOSEST,
-        "cleaning_scalars": _SQL_CLEANING,
-        "xml_shred": _SQL_XML_SHRED,
-        "json_flatten": _SQL_JSON,
-        "asof_join": _SQL_ASOF,
-        "range_join": _SQL_RANGE_JOIN,
-        "tumbling_window": _SQL_TUMBLING,
-        "sliding_window": _SQL_SLIDING,
-        "session_window": _SQL_SESSION,
-        # streaming twins share the batch oracles — identical result sets
-        "streaming_tumbling": _SQL_TUMBLING,
-        "streaming_session": _SQL_SESSION,
-        "streaming_user_stats": _SQL_STREAM_USER_STATS,
-        "exact_dup_groups": _SQL_EXACT_DUP,
-        "minhash_signatures": _sql_minhash_sigs_exploded(),
-        "minhash_lsh_pairs": _sql_lsh_pairs(),
-        "minhash_lsh_pairs_expr": _sql_lsh_pairs(),
-        "lsh_dedup_incremental": _sql_lsh_incremental(),
-        "ngram_jaccard_pairs": _SQL_JACCARD,
-        "simhash": _sql_simhash(),
-        "simhash_expr": _sql_simhash(),
-        "simhash_pairs": _sql_simhash_pairs(),
-        "near_dup_components": _sql_near_dup_components(),
-        "near_dup_dedup": _sql_near_dup_dedup(),
-        "text_quality": _SQL_TEXT_QUALITY,
-        "token_counts": _SQL_TOKEN_COUNTS,
-        "language_id": _sql_language_id(),
-        "fingerprints": _SQL_FINGERPRINTS,
-        "normalize_text": _SQL_NORMALIZE,
-        "scrub_pii": _sql_scrub_pii(),
-        "chunk_documents": _sql_chunk_documents(),
-        "top_ngrams": _sql_top_ngrams(),
-        "tfidf_top_terms": _sql_tfidf(),
-        "tfidf_doc_similarity": _sql_tfidf_doc_similarity(),
-        "hash_sample": _sql_hash_sample(),
-        "hash_split": _sql_hash_split(),
-        "weighted_sample": _sql_weighted_sample(),
-        "quota_cap": _sql_quota_cap(),
-        "quality_filter": _SQL_QUALITY_FILTER,
-        "assign_packs": _SQL_ASSIGN_PACKS,
-        # scalable two-phase packing must equal the single-window packing
-        "assign_packs_scalable": _SQL_ASSIGN_PACKS,
-        "ann_brute_force": _SQL_ANN_BRUTE,
-        "ann_lsh": _sql_ann_lsh(),
-        "ann_ivf": _sql_ann_ivf(),
-        # persisted index must reproduce the in-memory IVF bit-for-bit
-        "ann_ivf_indexed": _sql_ann_ivf(),
-        "ann_recall": _sql_ann_recall(),
-        "ann_rrf": _sql_ann_rrf(),
-        "embedding_near_dup": _sql_embedding_near_dup(),
-        "multimodal_features": _SQL_MULTIMODAL,
-        "frame_sample": _SQL_FRAME_SAMPLE,
-        "csv_roundtrip": _SQL_CSV_ROUNDTRIP,
-        "filename_partition": _SQL_FNAME_PARTITION,
-        "ctas_roundtrip": _SQL_CTAS,
-        "jdbc_roundtrip": _SQL_JDBC_ROUNDTRIP,
-        "jsonl_roundtrip": _SQL_JSONL_ROUNDTRIP,
-        "order_by_limit": _SQL_ORDER_BY_LIMIT,
-        "word_stats": _SQL_WORD_STATS,
-        "cube_agg": _SQL_CUBE,
-        "grouped_median": _SQL_GROUPED_MEDIAN,
-        "histogram": _SQL_HISTOGRAM,
-        "profile_table": _SQL_PROFILE,
-        # the sketch-contract harness: oracle pins exact stats + TRUE
-        # for every in-engine-verified error bound
-        "approx_profile": _SQL_APPROX_PROFILE,
-        "contamination_hits": _SQL_CONTAMINATION_HITS,
-        "decontaminate": _SQL_DECONTAMINATE,
-        "grouped_quantiles": _SQL_GROUPED_QUANTILES,
-        "iqr_outliers": _SQL_IQR_OUTLIERS,
-        "merge_upsert": _SQL_MERGE_UPSERT,
-        "stratified_sample": _SQL_STRATIFIED_SAMPLE,
-        "constraint_violations": _SQL_CONSTRAINTS,
-        "having_filter": _SQL_HAVING,
-        "count_distinct_agg": _SQL_COUNT_DISTINCT,
-        "null_safe_join": _SQL_NULL_SAFE_JOIN,
-        "below_avg_filter": _SQL_BELOW_AVG,
-        "resample_ffill": _SQL_RESAMPLE_FFILL,
-        "scd2_history": _SQL_SCD2,
-        "grouping_sets": _SQL_GROUPING_SETS,
-        "collect_sorted": _SQL_COLLECT_SORTED,
-        "range_frame_window": _SQL_RANGE_FRAME,
-        "pagerank": _SQL_PAGERANK,
-        "exists_subquery": _SQL_EXISTS,
-        "scalar_subquery": _SQL_SCALAR_SUBQ,
-        "line_dedup": _SQL_LINE_DEDUP,
-        "ntile_windows": _SQL_NTILE,
-        "kmeans_assign": _SQL_KMEANS,
-        "fuzzy_join": _SQL_FUZZY,
-        "quantize_embeddings": _SQL_QUANTIZE,
-        "salted_join": _SQL_SALTED_JOIN,
-        "repetition_signals": _SQL_REPETITION,
-        "orc_roundtrip": _SQL_ORC_ROUNDTRIP,
-        "sessionize": _SQL_SESSIONIZE,
-        "funnel": _SQL_FUNNEL,
-        "cohort_retention": _SQL_COHORT,
-        "kmeans_train": _SQL_KMEANS_TRAIN,
-        "build_vocab": _SQL_VOCAB,
-        "zscore": _SQL_ZSCORE,
-        "html_extract": _SQL_HTML_EXTRACT,
-        "rare_tokens": _SQL_RARE_TOKENS,
-        "bm25_search": _SQL_BM25,
-        "jaccard_prefix_join": _SQL_JACCARD_PREFIX,
-        "duplicate_spans": _sql_duplicate_spans(),
-        "span_dup_stats": _sql_span_dup_stats(),
-        "mix_sources": _sql_mix_sources(),
-        "select_until_budget": _sql_select_until_budget(),
-        "embedding_dim_profile": _SQL_EMBEDDING_DIM_PROFILE,
-        "distribution_drift": _SQL_DRIFT,
-        "snapshot_diff": _sql_snapshot_diff(),
-        "multimodal_decode_real": _sql_multimodal_decode_real(),
-        "jpeg_decode_real": _sql_jpeg_decode_real(),
-        "bpe_train": _sql_bpe_train(),
-        "bpe_segment": _sql_bpe_segment(),
-        "winsorize": _SQL_WINSORIZE,
-        "streaming_join": _SQL_STREAMING_JOIN,
-        "action_sequences": _SQL_ACTION_SEQUENCES,
-        "negative_samples": _sql_negative_samples(),
-        "corpus_report": _SQL_CORPUS_REPORT,
-        "ngram_model_score": _sql_ngram_model_score(),
-        "streaming_dedup": _SQL_STREAMING_DEDUP,
-        "training_pipeline": _sql_training_pipeline(),
-        "zorder_key": _SQL_ZORDER,
-        "gdpr_delete": _SQL_GDPR_DELETE,
-        "compact_roundtrip": _SQL_COMPACT,
-        "variant_extract": _SQL_VARIANT,
-        "volume_shipping": _SQL_VOLUME_SHIPPING,
-        "market_share": _SQL_MARKET_SHARE,
-        "product_profit": _SQL_PRODUCT_PROFIT,
-        "returned_items": _SQL_RETURNED_ITEMS,
-        "priority_shipmode": _SQL_PRIORITY_SHIPMODE,
-        "customer_distribution": _SQL_CUSTOMER_DISTRIBUTION,
-        "promo_revenue": _SQL_PROMO_REVENUE,
-        "top_supplier": _SQL_TOP_SUPPLIER,
-        "min_cost_supplier": _SQL_MIN_COST_SUPPLIER,
-        "disjunctive_pred": _SQL_DISJUNCTIVE_PRED,
-        "forecast_revenue": _SQL_FORECAST_REVENUE,
-        "important_parts": _SQL_IMPORTANT_PARTS,
-        "promo_suppliers": _SQL_PROMO_SUPPLIERS,
-        "waiting_suppliers": _SQL_WAITING_SUPPLIERS,
-        "semantic_dedup": _sql_semantic_dedup(),
-        "remove_duplicate_spans": _sql_remove_duplicate_spans(),
-        "temperature_mix": _sql_temperature_mix(),
-        "skew_report": _SQL_SKEW_REPORT,
-        "token_entropy": _sql_token_entropy(),
-        "tokenize_pack": _sql_tokenize_pack(),
-        "interval_concurrency": _SQL_INTERVAL_CONCURRENCY,
-        "incremental_recompute": _SQL_INCREMENTAL_RECOMPUTE,
-        "audio_decode_real": _SQL_AUDIO_DECODE_REAL,
-        "mad_outliers": _SQL_MAD_OUTLIERS,
-        "ann_lsh_multi": _sql_ann_lsh_multi(),
-        "action_transitions": _SQL_ACTION_TRANSITIONS,
-        "contamination_report": _SQL_CONTAMINATION_REPORT,
-        "attribution": _SQL_ATTRIBUTION,
-        "heavy_hitters": _sql_heavy_hitters(),
-        "fk_containment": _SQL_FK_CONTAINMENT,
-        "flatten_hierarchy": _SQL_FLATTEN_HIERARCHY,
-        "language_confusion": _sql_language_confusion(),
-        "dedup_report": _sql_dedup_report(),
-        "hybrid_search": _sql_hybrid_search(),
-        # streaming ingest shares the batch quality-filter oracle —
-        # identical result set proves gate+dedup stream == batch
-        "streaming_ingest": _SQL_QUALITY_FILTER,
-        "table_digest": _sql_table_digest(),
-        "lsh_recall": _sql_lsh_recall(),
-        "power_iteration": _sql_power_iteration(),
-        "group_split": _sql_group_split(),
-        "merge_aggregate": _SQL_MERGE_AGGREGATE,
-        "bucketed_packs": _sql_bucketed_packs(),
-        "streaming_sliding": _SQL_SLIDING,
-        "contrastive_pairs": _sql_contrastive_pairs(),
-        # ONE string, two engines: the oracle IS the Spark query text
-        "sql_interface": _SQL_INTERFACE_TEXT,
-        "image_augment_real": _sql_image_augment_real(),
-        "dup_weights": _SQL_DUP_WEIGHTS,
-        "collocations": _sql_collocations(),
-        "seasonality": _SQL_SEASONALITY,
-        "ann_mrr": _sql_ann_mrr(),
-        "ann_ndcg": _sql_ann_ndcg(),
-        "quality_roc": _sql_quality_roc(),
-        "shuffle_shards": _SQL_SHUFFLE_SHARDS,
-        "pq_encode": _SQL_PQ_ENCODE,
-        "pq_search": _SQL_PQ_SEARCH,
-        "record_linkage": _SQL_RECORD_LINKAGE,
-        "materialize_epoch": _sql_materialize_epoch(),
-        "image_dhash_pairs": _SQL_IMAGE_DHASH_PAIRS,
-        "epoch_pipeline": _sql_epoch_pipeline(),
-        "row_diff": _sql_row_diff(),
-        "pareto_front": _SQL_PARETO_FRONT,
-        "frequent_pairs": _SQL_FREQUENT_PAIRS,
-        "ivf_pq_search": _SQL_IVF_PQ_SEARCH,
-        "image_dedup": _SQL_IMAGE_DEDUP,
-        "versioned_roundtrip": _sql_row_diff(),
-        "cdc_rollup": _SQL_CDC_ROLLUP,
-        "augment_dropout": _sql_augment_dropout(),
-        "k_anonymity": _SQL_K_ANONYMITY,
-        "twap": _SQL_TWAP,
-        "ohlc": _SQL_OHLC,
-        "gini": _SQL_GINI,
-        "benford": _SQL_BENFORD,
-        "containment_pairs": _sql_containment_pairs(),
-        "source_keywords": _SQL_SOURCE_KEYWORDS,
-        "doc_features": _sql_doc_features(),
-        "sequence_match": _SQL_SEQUENCE_MATCH,
-        "decayed_sum": _SQL_DECAYED_SUM,
-        "daily_anomalies": _SQL_DAILY_ANOMALIES,
-        "normalized_dup_gain": _SQL_NORMALIZED_DUP_GAIN,
-        "quantile_bins": _sql_quantile_bins(),
-        "dedup_keep_best": _sql_dedup_keep_best(),
-        "contingency": _SQL_CONTINGENCY,
-        "running_distinct": _SQL_RUNNING_DISTINCT,
-        # approx_profile: sketch outputs are engine-specific by design —
-        # rows-only check; error bound asserted in tests/test_profile.py
-    }
+    """Each query's DuckDB oracle, keyed like ``queries()``: the constant
+    ``_SQL_<NAME>`` if the module defines it, else ``_sql_<name>()``.
+    Defining exactly one of the two is what gives a query its oracle."""
+    scope = globals()
+    oracles = {}
+    for name in queries():
+        const = scope.get(f"_SQL_{name.upper()}")
+        build = scope.get(f"_sql_{name}")
+        if (const is None) == (build is None):
+            raise LookupError(
+                f"query {name!r} needs exactly one oracle: "
+                f"_SQL_{name.upper()} or _sql_{name}()"
+            )
+        oracles[name] = const if build is None else build()
+    return oracles

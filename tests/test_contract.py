@@ -20,6 +20,54 @@ def test_every_query_has_an_oracle_and_vice_versa():
     assert len(q) >= 216  # the surface only grows
 
 
+def test_oracle_lookup_names_a_builder_without_exactly_one_oracle(
+    monkeypatch,
+):
+    """oracle_sql() derives each oracle from the query's name, so a
+    builder with no ``_SQL_<NAME>``/``_sql_<name>()`` (or with both)
+    must fail loudly and name the query, not drop out of the check."""
+    import pytest
+
+    import __spark_entry__ as entrymod
+
+    scope = vars(entrymod)
+    monkeypatch.setitem(scope, "q_fake", lambda spark, sf_dir: None)
+    with pytest.raises(LookupError, match="'fake'"):
+        entrymod.oracle_sql()
+    monkeypatch.setitem(scope, "_SQL_FAKE", "SELECT 1")
+    assert entrymod.oracle_sql()["fake"] == "SELECT 1"
+    monkeypatch.setitem(scope, "_sql_fake", lambda: "SELECT 2")
+    with pytest.raises(LookupError, match="'fake'"):
+        entrymod.oracle_sql()
+
+
+def test_every_oracle_helper_is_used():
+    """Every module-level ``_SQL_*`` constant and ``_sql_*`` function is
+    some query's oracle by name or is referenced elsewhere in the
+    module, so a renamed query cannot leave its old oracle behind."""
+    import ast
+
+    import __spark_entry__ as entrymod
+
+    tree = ast.parse(open(entrymod.__file__).read())
+    defined = set()
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef):
+            defined.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = (node.targets if isinstance(node, ast.Assign)
+                       else [node.target])
+            defined.update(t.id for t in targets if isinstance(t, ast.Name))
+    helpers = {n for n in defined if n.startswith(("_SQL_", "_sql_"))}
+    loaded = {n.id for n in ast.walk(tree)
+              if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+    oracles = set()
+    for name in entrymod.queries():
+        oracles.update((f"_SQL_{name.upper()}", f"_sql_{name}"))
+    orphans = sorted(helpers - oracles - loaded)
+    assert not orphans, f"oracle helpers no query uses: {orphans}"
+
+
 def test_every_query_listed_in_coverage():
     """COVERAGE.md is the judge's map from SURVEY §2 to the declared
     surface — round 10 found 10+ queries missing from it (VERDICT r10

@@ -689,7 +689,7 @@ def test_stream_partition_scope_is_adaptive_and_restores(spark, tmp_path):
     # session value even on error.
     import os as _os
 
-    from __spark_entry__ import (
+    from blueforty___etl_data_pipeline_spark.streaming.drain import (
         _scoped_stream_partitions,
         _stream_partitions_for,
     )
@@ -729,7 +729,9 @@ def test_stream_partition_scope_is_adaptive_and_restores(spark, tmp_path):
 def test_stream_partition_floor_follows_cores(tmp_path):
     # Below 8 cores the floor drops to one wave of tasks per core; at 8
     # cores and above it stays 8.
-    from __spark_entry__ import _stream_partitions_for
+    from blueforty___etl_data_pipeline_spark.streaming.drain import (
+        _stream_partitions_for,
+    )
 
     src = tmp_path / "staged"
     src.mkdir()
@@ -751,7 +753,9 @@ def test_stream_partition_size_counts_every_data_file(tmp_path):
     # partitioned into k=v subdirectories; Spark reads all of them.
     # Names starting with "_" or "." (markers, checksums, metadata
     # dirs) are not data and are not counted.
-    from __spark_entry__ import _stream_partitions_for
+    from blueforty___etl_data_pipeline_spark.streaming.drain import (
+        _stream_partitions_for,
+    )
 
     src = tmp_path / "staged"
     (src / "day=1").mkdir(parents=True)

@@ -148,12 +148,7 @@ def main() -> None:
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    # (Retired, round 13: the one historical rename —
-    # CORRECTNESS_r2's `minhash_lsh_pairs_arrow`, renamed to the
-    # default `minhash_lsh_pairs` path — is documented in COVERAGE.md;
-    # no live mapping is needed because `minhash_lsh_pairs` itself
-    # carries fresh driver signatures under its current name.)
-    n_pass = n_fail = n_rows_only = 0
+    n_pass = n_fail = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -170,10 +165,6 @@ def main() -> None:
         except ListColumnError as e:
             print(f"FAIL {name}: spark result: {e}")
             n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"rows-only {name}: {len(spdf)} rows ({time.time()-t0:.1f}s)")
-            n_rows_only += 1
             continue
         try:
             opdf = con.sql(oracles[name]).df()
@@ -206,7 +197,7 @@ def main() -> None:
                         print(f"  spark:  {a[:200]}\n  oracle: {b[:200]}")
                         break
             n_fail += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
+    print(f"\n{n_pass} pass, {n_fail} fail")
     spark.stop()
     if n_fail:
         sys.exit(1)

@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from blueforty___etl_data_pipeline_spark.session import get_spark
+from blueforty___etl_data_pipeline_spark.streaming import drain
 
 DEFAULT = [
     "streaming_outer_join",
@@ -75,7 +76,9 @@ def main() -> None:
         except Exception:
             pass
 
-    entrymod._await_streaming = spy_await
+    # drain_to_memory looks the name up in its module; streaming_upsert
+    # calls the name the entry module imported.
+    drain._await_streaming = entrymod._await_streaming = spy_await
 
     out: dict[str, dict] = {}
     for name in names:

@@ -1,10 +1,13 @@
-"""Time named queries with bench.py's exact protocol, in one session.
+"""Time named queries through bench.py's noop sink, in one session.
 
 Usage: python tools/time_queries.py [--runs N] [--tree DIR] q1 q2 ...
 
-Warm each plan at sf0.001, then time it at $SPARK_GRAFT_SF_DIR
-(default sf0.1) through the noop sink; report the median of N runs
-(default 3).  Each run gets its own job group, so the jobs it
+Run each plan once untimed at $SPARK_GRAFT_SF_DIR (default sf0.1),
+then time it at the same scale through the noop sink; report the
+median of N runs (default 3).  The untimed run pays the first-run
+costs at the timed scale (code generation, the table's schema
+inference), so even ``--runs 1`` times a warm run; bench.py warms at
+sf0.001 instead.  Each run gets its own job group, so the jobs it
 started (builder jobs such as eager lineage cuts, plus the final
 write) are counted from the status tracker; job counts do not drift
 between sessions the way wall times do.  Streaming drains run their
@@ -55,9 +58,6 @@ def main() -> None:
     from blueforty___etl_data_pipeline_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    warm_dir = "/root/testdata/sf0.001"
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
     spark = get_spark(app_name="blueforty-time-queries")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
@@ -72,10 +72,7 @@ def main() -> None:
             spark.catalog.clearCache()
         except Exception:
             pass
-        try:
-            fn(spark, warm_dir).write.mode("overwrite").format("noop").save()
-        except Exception as exc:
-            print(f"WARM-FAIL {name}: {exc}", file=sys.stderr)
+        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
         samples, jobs = [], []
         for i in range(args.runs):
             group = f"time_queries:{name}:{i}"
